@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.io.Synthesizer
-import graft.pipe.ExtractionPipeline
 
 /** Benchmark entry. Headline metric: end-to-end extraction throughput
   * (docs/sec) over the synthesized interleaved doc table.
@@ -77,25 +76,31 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+  /** Wall seconds of one registry query into the noop sink. */
+  def runQuery(spark: SparkSession, sfDir: String, name: String): Double =
+    time(SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save())
 
-  private def newSession(threads: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC") // NTZ↔epoch reinterpretation (q24)
-      // sandbox tables are tiny (MBs); the default 128 MB maxPartitionBytes
-      // bin-packs them into ~4 splits and caps scan parallelism at 4 tasks
-      // regardless of cores. 100 TB inputs have the opposite problem — there
-      // this knob sizes partitions to fit executor memory (SURVEY.md §4).
-      .config("spark.sql.files.maxPartitionBytes", "131072")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** Warm the extraction codepath (JIT + codegen) before any query is
+    * timed: x01 is alphabetically first to touch the pipeline and was
+    * otherwise charged the one-time compile of the whole extraction chain
+    * (5.3 s vs its 0.16 s steady state in round 1). */
+  def warmExtraction(spark: SparkSession, sfDir: String): Unit =
+    Seq("x01_extract_e2e", "x04_extract_donut").foreach { n =>
+      try runQuery(spark, sfDir, n) catch { case _: Throwable => }
+    }
+
+  /** Min-of-`reps` time per query, -1 for a query that throws, as the
+    * JSON `"queries"` object and the total over the queries that ran. */
+  private def queryTimes(spark: SparkSession, sfDir: String,
+                         names: Seq[String], reps: Int): (String, Double) = {
+    val results = names.map { name =>
+      name -> (try Seq.fill(reps)(runQuery(spark, sfDir, name)).min
+               catch { case _: Throwable => -1.0 })
+    }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    (qs, results.map(_._2).filter(_ >= 0).sum)
   }
 
   /** Materialize the synthesized doc table once (untimed) — the timed job
@@ -107,21 +112,9 @@ object Bench {
         .write.mode("overwrite").parquet(path)
   }
 
-  /** Median-of-`reps` wall time for the fused pipeline over the
-    * materialized doc table (identical files at both parallelism levels). */
-  private def measure(spark: SparkSession, path: String, reps: Int = 3): Double = {
-    import spark.implicits._
-    def run(): Double = time {
-      ExtractionPipeline.run(spark.read.parquet(path).as[graft.model.Doc])
-        .toDF().write.format("noop").mode("overwrite").save()
-    }
-    run() // warmup (JIT + codegen) inside this session
-    (1 to reps).map(_ => run()).min
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.cpus
     val lowCpus = math.max(cpus / 4, 1)
     // enough work that job-submit overhead (~0.2s) is noise at the low
     // level; SPARK_GRAFT_SCALING_DOCS overrides for the sf1 campaign
@@ -135,7 +128,7 @@ object Bench {
 
     // Materialize the input once (untimed).
     locally {
-      val s = newSession(cpus)
+      val s = Sessions.local(cpus)
       materializeDocs(s, scalingDocs, partitions, docTablePath)
       s.stop()
     }
@@ -143,25 +136,14 @@ object Bench {
     // Iteration mode: per-query timings only, no taskset scaling phases.
     val queriesOnly = sys.env.get("SPARK_GRAFT_QUERIES_ONLY").contains("1")
     if (queriesOnly) {
-      val spark = newSession(cpus)
-      Seq("x01_extract_e2e", "x04_extract_donut").foreach { n =>
-        try SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => }
-      }
+      val spark = Sessions.local(cpus)
+      warmExtraction(spark, sfDir)
       // SPARK_GRAFT_QUERY_REPS=1 for the sf1 sweep (min-of-3 at 10× data
       // costs an extra half hour for precision the heavy-tail table
       // doesn't need); default stays min-of-3
       val reps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS", "3").toInt
-      val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        def one(): Double =
-          time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-        val sec = try Seq.fill(reps)(one()).min catch { case _: Throwable => -1.0 }
-        name -> sec
-      }
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val total = results.map(_._2).filter(_ >= 0).sum
+      val (qs, total) = queryTimes(spark, sfDir,
+        SparkEntry.queries.keys.toSeq.sorted, reps)
       println(s"""{"queries_only":true,"queries":$qs,"total_query_sec":${f"$total%.3f"}}""")
       spark.stop()
       return
@@ -284,36 +266,19 @@ object Bench {
       fallback = s"${lowCpus}->${cpus}" -> effHeadline)
 
     // --- final session: headline + per-query timings ----------------------
-    val spark = newSession(cpus)
+    val spark = Sessions.local(cpus)
     val tpFull = scalingDocs / tFull
     val tpLow = scalingDocs / tLow
     val effMinPaired = tpFull / (4.0 * tpLow)
 
-    // Warm the extraction codepath (JIT + codegen) before any query is
-    // timed: x01 is alphabetically first to touch the pipeline and was
-    // otherwise charged the one-time compile of the whole extraction chain
-    // (5.3 s vs its 0.16 s steady state in round 1).
-    Seq("x01_extract_e2e", "x04_extract_donut").foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
+    warmExtraction(spark, sfDir)
 
     // min of 3 runs per query — single-shot numbers on this VM are
     // noise-dominated (noisy neighbors). SPARK_GRAFT_SKIP_QUERIES=1 skips
     // the tail (iteration aid: validate the scaling phases alone).
-    val queryList =
+    val (qs, total) = queryTimes(spark, sfDir,
       if (sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1)
-    val results = queryList.map { case (name, fn) =>
-      def one(): Double =
-        time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-      val sec = try Seq(one(), one(), one()).min catch { case _: Throwable => -1.0 }
-      name -> sec
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+      else SparkEntry.queries.keys.toSeq.sorted, reps = 3)
 
     println(
       s"""{"metric":"docs_per_sec","value":${f"$tpFull%.1f"},"unit":"docs/sec",""" +

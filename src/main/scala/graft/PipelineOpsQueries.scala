@@ -24,87 +24,6 @@ object PipelineOpsQueries {
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
-  /** p10's media-table dump location — count-keyed so Verify (sf0.01) and
-    * Bench (sf0.1) never clobber each other. The oracle SQL interpolates the
-    * SAME count-keyed path via `oracleSqlFor(dir)`, so query and oracle can
-    * never read different dumps regardless of which sf the driver runs. */
-  def mediaDumpPath(dir: String): String =
-    s"/tmp/graft_media_dump_${SparkEntry.docCountFor(dir)}"
-
-  def lshBucketDumpPath(dir: String): String =
-    s"/tmp/graft_lsh_buckets_${SparkEntry.docCountFor(dir)}"
-
-  def ivfAssignPath(dir: String): String =
-    s"/tmp/graft_ivf_assign_${SparkEntry.docCountFor(dir)}"
-  def ivfProbePath(dir: String): String =
-    s"/tmp/graft_ivf_probe_${SparkEntry.docCountFor(dir)}"
-  def ivfSweepAssignPath(dir: String): String =
-    s"/tmp/graft_ivf_sweep_assign_${SparkEntry.docCountFor(dir)}"
-  def ivfIncBasePath(dir: String): String =
-    s"/tmp/graft_ivf_inc_base_${SparkEntry.docCountFor(dir)}"
-  def ivfIncDeltaPath(dir: String): String =
-    s"/tmp/graft_ivf_inc_delta_${SparkEntry.docCountFor(dir)}"
-  def ivfIncProbePath(dir: String): String =
-    s"/tmp/graft_ivf_inc_probe_${SparkEntry.docCountFor(dir)}"
-  def graphInsertSweepPath(dir: String): String =
-    s"/tmp/graft_graph_insert_sweep_${SparkEntry.docCountFor(dir)}"
-  def ivfSweepProbePath(dir: String): String =
-    s"/tmp/graft_ivf_sweep_probe_${SparkEntry.docCountFor(dir)}"
-
-  def multiBucketDumpPath(dir: String): String =
-    s"/tmp/graft_lsh_multi_${SparkEntry.docCountFor(dir)}"
-
-  def lshRecallDumpPath(dir: String): String =
-    s"/tmp/graft_lsh_recall_${SparkEntry.docCountFor(dir)}"
-
-  def bandSweepDumpPath(dir: String): String =
-    s"/tmp/graft_band_sweep_${SparkEntry.docCountFor(dir)}"
-
-  def mgDumpPath(dir: String): String =
-    s"/tmp/graft_mg_summary_${SparkEntry.docCountFor(dir)}"
-
-  def deflateDumpPath(dir: String): String =
-    s"/tmp/graft_deflate_dump_${SparkEntry.docCountFor(dir)}"
-
-  def streamDeconSinkPath(dir: String): String =
-    s"/tmp/graft_stream_decon_${SparkEntry.docCountFor(dir)}"
-  def streamUpsertSnapshotPath(dir: String): String =
-    s"/tmp/graft_stream_upsert_${SparkEntry.docCountFor(dir)}"
-  def streamDedupSinkPath(dir: String): String =
-    s"/tmp/graft_stream_dedup_${SparkEntry.docCountFor(dir)}"
-  def streamSessionSinkPath(dir: String): String =
-    s"/tmp/graft_stream_session_${SparkEntry.docCountFor(dir)}"
-  def streamIntervalSinkPath(dir: String): String =
-    s"/tmp/graft_stream_interval_${SparkEntry.docCountFor(dir)}"
-  def streamTwsSinkPath(dir: String): String =
-    s"/tmp/graft_stream_tws_${SparkEntry.docCountFor(dir)}"
-
-  def beamVisitedPath(dir: String): String =
-    s"/tmp/graft_beam_visited_${SparkEntry.docCountFor(dir)}"
-  def beamSweepPath(dir: String): String =
-    s"/tmp/graft_beam_sweep_${SparkEntry.docCountFor(dir)}"
-  def descentSweepPath(dir: String): String =
-    s"/tmp/graft_descent_sweep_${SparkEntry.docCountFor(dir)}"
-
-  def semDedupAssignPath(dir: String): String =
-    s"/tmp/graft_semdedup_assign_${SparkEntry.docCountFor(dir)}"
-
-  def pqCodebookPath(dir: String): String =
-    s"/tmp/graft_pq_codebook_${SparkEntry.docCountFor(dir)}"
-  def pqCodesPath(dir: String): String =
-    s"/tmp/graft_pq_codes_${SparkEntry.docCountFor(dir)}"
-  def pqRerankCodebookPath(dir: String): String =
-    s"/tmp/graft_pq_rr_codebook_${SparkEntry.docCountFor(dir)}"
-  def pqRerankCodesPath(dir: String): String =
-    s"/tmp/graft_pq_rr_codes_${SparkEntry.docCountFor(dir)}"
-  def pqDriftCodebookPath(dir: String): String =
-    s"/tmp/graft_pq_drift_codebook_${SparkEntry.docCountFor(dir)}"
-  def pqDriftCodesPath(dir: String): String =
-    s"/tmp/graft_pq_drift_codes_${SparkEntry.docCountFor(dir)}"
-
-  def phashRefsPath(dir: String): String =
-    s"/tmp/graft_phash_refs_${SparkEntry.docCountFor(dir)}"
-
   /** p77's banned-phrase list — literal, border-free (no pattern has a
     * proper prefix that is also a suffix), so Aho–Corasick all-matches ==
     * regexp non-overlapping matches (BlocklistScan scaladoc). */
@@ -124,13 +43,13 @@ object PipelineOpsQueries {
       // bucket-restricted ranking (the sign-LSH hash itself is engine code)
       val e = emb(s, dir)
       SimilarityOps.lshBuckets(e).write.mode("overwrite")
-        .parquet(lshBucketDumpPath(dir))
-      SimilarityOps.lshTopKFrom(e, s.read.parquet(lshBucketDumpPath(dir)))
+        .parquet(SparkEntry.dumpPath("lsh_buckets", dir))
+      SimilarityOps.lshTopKFrom(e, s.read.parquet(SparkEntry.dumpPath("lsh_buckets", dir)))
     }),
     "p09_fingerprints" -> ((s, dir) => TextOps.fingerprints(docs(s, dir))),
     "p10_media_stats" -> ((s, dir) =>
       MultimodalOps.mediaStatsDumped(SparkEntry.docTable(s, dir),
-        mediaDumpPath(dir))),
+        SparkEntry.dumpPath("media_dump", dir))),
     // image-side dedup (LAION-style): 64-bit dHash per distinct media
     // payload via one codegen byte pass, 4×16-bit band self-join with
     // pigeonhole recall 1.0 at hamming ≤ 3, exact bit_count(xor) verify;
@@ -138,7 +57,7 @@ object PipelineOpsQueries {
     // integer math and brute-forces the exact all-pairs answer
     "p127_phash_neardups" -> ((s, dir) =>
       MultimodalOps.phashNearDupsDumped(SparkEntry.docTable(s, dir),
-        phashRefsPath(dir))),
+        SparkEntry.dumpPath("phash_refs", dir))),
     // columnar-encoding advisor (physical design): per-column PLAIN/RLE/
     // DICT byte models over block-local runs (writers reset encodings
     // per page — and the blocked window avoids the single-partition
@@ -187,11 +106,11 @@ object PipelineOpsQueries {
       val e = emb(s, dir)
       val centroids = graft.ops.IvfOps.train(e)
       graft.ops.IvfOps.assign(e, centroids)
-        .write.mode("overwrite").parquet(ivfAssignPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_assign", dir))
       graft.ops.IvfOps.probes(e, centroids, numQueries = 10, nprobe = 2)
-        .write.mode("overwrite").parquet(ivfProbePath(dir))
-      graft.ops.IvfOps.topKFrom(e, s.read.parquet(ivfAssignPath(dir)),
-        s.read.parquet(ivfProbePath(dir)), numQueries = 10, topK = 10)
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_probe", dir))
+      graft.ops.IvfOps.topKFrom(e, s.read.parquet(SparkEntry.dumpPath("ivf_assign", dir)),
+        s.read.parquet(SparkEntry.dumpPath("ivf_probe", dir)), numQueries = 10, topK = 10)
     }),
     "p11_shingle_counts" -> ((s, dir) => DedupOps.shingleCounts(docs(s, dir))),
     "p14_token_df" -> ((s, dir) => graft.ops.CorpusOps.tokenDf(docs(s, dir))),
@@ -328,8 +247,8 @@ object PipelineOpsQueries {
       // mediaStatsDumped writes the dump eagerly (parquet write is an
       // action inside the call); the returned stats DF is discarded
       MultimodalOps.mediaStatsDumped(SparkEntry.docTable(s, dir),
-        mediaDumpPath(dir))
-      MultimodalOps.preprocessPlan(s.read.parquet(mediaDumpPath(dir)))
+        SparkEntry.dumpPath("media_dump", dir))
+      MultimodalOps.preprocessPlan(s.read.parquet(SparkEntry.dumpPath("media_dump", dir)))
     }),
     // concat-then-chunk sequence packing: per-doc global token offset +
     // pack range via the distributed prefix sum (never a SinglePartition
@@ -370,9 +289,9 @@ object PipelineOpsQueries {
       import org.apache.spark.sql.functions.col
       val e = emb(s, dir)
       SimilarityOps.lshBucketsMulti(e, bits = 4, tables = 8)
-        .write.mode("overwrite").parquet(multiBucketDumpPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("lsh_multi", dir))
       SimilarityOps.embeddingNearDupsFrom(e,
-          s.read.parquet(multiBucketDumpPath(dir)), minCosine = 0.45)
+          s.read.parquet(SparkEntry.dumpPath("lsh_multi", dir)), minCosine = 0.45)
         .select(col("vec_a"), col("vec_b"))
         .orderBy(col("vec_a"), col("vec_b"))
     }),
@@ -420,8 +339,8 @@ object PipelineOpsQueries {
       import org.apache.spark.sql.functions._
       val d = docs(s, dir)
       DedupOps.minhashCandidates(d, w = 3, bands = 1, rowsPerBand = 16)
-        .write.mode("overwrite").parquet(lshRecallDumpPath(dir))
-      val cands = s.read.parquet(lshRecallDumpPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("lsh_recall", dir))
+      val cands = s.read.parquet(SparkEntry.dumpPath("lsh_recall", dir))
         .withColumn("is_cand", lit(1L))
       val exact = DedupOps.exactJaccardPairs(d, w = 3, minJaccardPct = 60)
         .select(col("doc_a"), col("doc_b")).withColumn("is_exact", lit(1L))
@@ -512,7 +431,7 @@ object PipelineOpsQueries {
     // n/17 cleared nothing on this corpus once the output became the
     // exact above-threshold set)
     "p57_heavy_hitters" -> ((s, dir) =>
-      graft.ops.CorpusOps.heavyHitters(docs(s, dir), 64, mgDumpPath(dir))),
+      graft.ops.CorpusOps.heavyHitters(docs(s, dir), 64, SparkEntry.dumpPath("mg_summary", dir))),
 
     // bigram-LM surprisal: the conditional upgrade of p38's unigram
     // filter, pure integer bit-length arithmetic
@@ -721,8 +640,8 @@ object PipelineOpsQueries {
           DedupOps.minhashCandidates(d, w = 3, bands = b, rowsPerBand = r)
             .select(lit(b.toLong).as("bands"), col("doc_a"), col("doc_b"))
         }.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(bandSweepDumpPath(dir))
-      val cand = s.read.parquet(bandSweepDumpPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("band_sweep", dir))
+      val cand = s.read.parquet(SparkEntry.dumpPath("band_sweep", dir))
       val exact = DedupOps.exactJaccardPairs(d, w = 3, minJaccardPct = 60)
         .select(col("doc_a"), col("doc_b")).localCheckpoint(true)
       val ex = exact.agg(count(lit(1)).as("n_exact"))
@@ -809,7 +728,7 @@ object PipelineOpsQueries {
     // (the cheap perplexity stand-in), dumped so the oracle re-aggregates
     // without recomputing zlib
     "p102_compression_signal" -> ((s, dir) =>
-      CorpusOps.compressionSignal(docs(s, dir), deflateDumpPath(dir))),
+      CorpusOps.compressionSignal(docs(s, dir), SparkEntry.dumpPath("deflate_dump", dir))),
 
     // k-anonymity census over (source, lang, 256-char size bucket)
     // quasi-identifiers: group-size histogram + cumulative below-k docs
@@ -831,12 +750,12 @@ object PipelineOpsQueries {
       val e = emb(s, dir)
       val cb = graft.ops.PqOps.train(e)
       graft.ops.PqOps.codebookDf(s, cb)
-        .coalesce(1).write.mode("overwrite").parquet(pqCodebookPath(dir))
+        .coalesce(1).write.mode("overwrite").parquet(SparkEntry.dumpPath("pq_codebook", dir))
       graft.ops.PqOps.encode(e, cb)
-        .write.mode("overwrite").parquet(pqCodesPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("pq_codes", dir))
       graft.ops.PqOps.adcRecallFrom(e,
-        s.read.parquet(pqCodesPath(dir)),
-        s.read.parquet(pqCodebookPath(dir)))
+        s.read.parquet(SparkEntry.dumpPath("pq_codes", dir)),
+        s.read.parquet(SparkEntry.dumpPath("pq_codebook", dir)))
     }),
 
     // two-stage retrieval audit (the production ANN serving shape):
@@ -848,12 +767,12 @@ object PipelineOpsQueries {
       val cb = graft.ops.PqOps.train(e)
       graft.ops.PqOps.codebookDf(s, cb)
         .coalesce(1).write.mode("overwrite")
-        .parquet(pqRerankCodebookPath(dir))
+        .parquet(SparkEntry.dumpPath("pq_rr_codebook", dir))
       graft.ops.PqOps.encode(e, cb)
-        .write.mode("overwrite").parquet(pqRerankCodesPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("pq_rr_codes", dir))
       graft.ops.PqOps.rerankRecall(e,
-        s.read.parquet(pqRerankCodesPath(dir)),
-        s.read.parquet(pqRerankCodebookPath(dir)))
+        s.read.parquet(SparkEntry.dumpPath("pq_rr_codes", dir)),
+        s.read.parquet(SparkEntry.dumpPath("pq_rr_codebook", dir)))
     }),
 
     // Matryoshka truncation audit: the first-16-dims ranking vs the full
@@ -1022,8 +941,8 @@ object PipelineOpsQueries {
     // shuffle, no UDF)
     "p119_frame_schedule" -> ((s, dir) => {
       MultimodalOps.mediaStatsDumped(SparkEntry.docTable(s, dir),
-        mediaDumpPath(dir))
-      MultimodalOps.frameSampleSchedule(s.read.parquet(mediaDumpPath(dir)))
+        SparkEntry.dumpPath("media_dump", dir))
+      MultimodalOps.frameSampleSchedule(s.read.parquet(SparkEntry.dumpPath("media_dump", dir)))
     }),
 
     // record linkage (entity resolution): customers vs a deterministically
@@ -1115,12 +1034,12 @@ object PipelineOpsQueries {
       val cb = graft.ops.PqOps.train(e.where(col("vec_id") % 2 === 0))
       graft.ops.PqOps.codebookDf(s, cb)
         .coalesce(1).write.mode("overwrite")
-        .parquet(pqDriftCodebookPath(dir))
+        .parquet(SparkEntry.dumpPath("pq_drift_codebook", dir))
       graft.ops.PqOps.encode(e, cb)
-        .write.mode("overwrite").parquet(pqDriftCodesPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("pq_drift_codes", dir))
       graft.ops.PqOps.driftAudit(e,
-        s.read.parquet(pqDriftCodesPath(dir)),
-        s.read.parquet(pqDriftCodebookPath(dir)))
+        s.read.parquet(SparkEntry.dumpPath("pq_drift_codes", dir)),
+        s.read.parquet(SparkEntry.dumpPath("pq_drift_codebook", dir)))
     }),
 
     // rolling distinct via daily-HLL register-max algebra vs the exact
@@ -1201,13 +1120,13 @@ object PipelineOpsQueries {
       val e = emb(s, dir)
       val cs = graft.ops.IvfOps.train(e)
       graft.ops.IvfOps.assign(e, cs)
-        .write.mode("overwrite").parquet(ivfSweepAssignPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_sweep_assign", dir))
       Seq(1, 2, 4).map(n => graft.ops.IvfOps.probes(e, cs, numQueries = 10,
           nprobe = n).withColumn("nprobe", lit(n.toLong)))
         .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(ivfSweepProbePath(dir))
-      val assigned = s.read.parquet(ivfSweepAssignPath(dir))
-      val probed = s.read.parquet(ivfSweepProbePath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_sweep_probe", dir))
+      val assigned = s.read.parquet(SparkEntry.dumpPath("ivf_sweep_assign", dir))
+      val probed = s.read.parquet(SparkEntry.dumpPath("ivf_sweep_probe", dir))
       // materialized once — three sweep branches reuse it (p82's idiom);
       // without this the full brute cross join re-executes per branch
       val brute = SimilarityOps.bruteTopK(e)
@@ -1526,9 +1445,9 @@ object PipelineOpsQueries {
       val e = emb(s, dir)
       val centroids = graft.ops.IvfOps.train(e)
       graft.ops.IvfOps.assign(e, centroids)
-        .write.mode("overwrite").parquet(semDedupAssignPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("semdedup_assign", dir))
       SimilarityOps.semDedupFrom(e,
-        s.read.parquet(semDedupAssignPath(dir)), tau = 0.45)
+        s.read.parquet(SparkEntry.dumpPath("semdedup_assign", dir)), tau = 0.45)
     }),
 
     // URL canonicalization dedup: synthetic URLs derived from (source,
@@ -1618,7 +1537,7 @@ object PipelineOpsQueries {
       val streamRows = d.where(col("doc_id") % 17 =!= 3)
         .select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)].collect().sortBy(_._1)
-      val sink = streamDeconSinkPath(dir)
+      val sink = SparkEntry.dumpPath("stream_decon", dir)
       deleteRecursively(sink)
       val stream = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)]
@@ -1666,7 +1585,7 @@ object PipelineOpsQueries {
               .map { case (id, t) => (id, t + " v3", 3L, false) } ++
               d.filter(_._1 % 7 == 5).map { case (id, _) => (id, "", 3L, true) }
         }
-      val snap = streamUpsertSnapshotPath(dir)
+      val snap = SparkEntry.dumpPath("stream_upsert", dir)
       deleteRecursively(snap)
       val stream = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String, Long, Boolean)]
@@ -1700,9 +1619,9 @@ object PipelineOpsQueries {
         .localCheckpoint(true)
       graft.ops.GraphAnnOps.beamVisited(e, g, numQueries = 10, ef = 8,
           hops = 5)
-        .write.mode("overwrite").parquet(beamVisitedPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("beam_visited", dir))
       graft.ops.GraphAnnOps.topKFromVisited(e,
-        s.read.parquet(beamVisitedPath(dir)), numQueries = 10, k = 10)
+        s.read.parquet(SparkEntry.dumpPath("beam_visited", dir)), numQueries = 10, k = 10)
     }),
 
     // feature-histogram drift census between two snapshots (v2 =
@@ -1752,7 +1671,7 @@ object PipelineOpsQueries {
         .as[(Long, String)].collect()
       val rows = (originals ++ originals.filter(_._1 % 10 == 4)
         .map { case (id, t) => (id + 1000000L, t) }).sortBy(_._1)
-      val sink = streamDedupSinkPath(dir)
+      val sink = SparkEntry.dumpPath("stream_dedup", dir)
       deleteRecursively(sink)
       val stream = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)]
@@ -1791,8 +1710,8 @@ object PipelineOpsQueries {
       // to the r5 per-ef union (spec-pinned per-slice equality)
       graft.ops.GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8, 32),
           numQueries = 10, hops = 5)
-        .write.mode("overwrite").parquet(descentSweepPath(dir))
-      graphRecallTable(s, e, s.read.parquet(descentSweepPath(dir)))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("descent_sweep", dir))
+      graphRecallTable(s, e, s.read.parquet(SparkEntry.dumpPath("descent_sweep", dir)))
     }),
 
     // STREAMING session windows driven end-to-end (MemoryStream of
@@ -1815,7 +1734,7 @@ object PipelineOpsQueries {
       val rows = s.read.parquet(s"$dir/events.parquet")
         .select(col("ts"), col("user_id").cast("long"))
         .as[(java.sql.Timestamp, Long)].collect().sortBy(_._1.getTime)
-      val sink = streamSessionSinkPath(dir)
+      val sink = SparkEntry.dumpPath("stream_session", dir)
       deleteRecursively(sink)
       val stream = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(java.sql.Timestamp, Long)]
@@ -1872,7 +1791,7 @@ object PipelineOpsQueries {
       val cut2 = ev(2 * ev.length / 3)._2.getTime
       def batchOf(t: java.sql.Timestamp): Int =
         if (t.getTime <= cut1) 0 else if (t.getTime <= cut2) 1 else 2
-      val sink = streamIntervalSinkPath(dir)
+      val sink = SparkEntry.dumpPath("stream_interval", dir)
       deleteRecursively(sink)
       val pStream = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, java.sql.Timestamp, Long)]
@@ -1915,7 +1834,7 @@ object PipelineOpsQueries {
       val rows = s.read.parquet(s"$dir/events.parquet")
         .select(col("user_id").cast("long"), col("event_id").cast("long"))
         .as[(Long, Long)].collect().sortBy(_._2)
-      val sink = streamTwsSinkPath(dir)
+      val sink = SparkEntry.dumpPath("stream_tws", dir)
       deleteRecursively(sink)
       val key = "spark.sql.streaming.stateStore.providerClass"
       val prev = s.conf.getOption(key)
@@ -1956,15 +1875,15 @@ object PipelineOpsQueries {
       val delta = e.where(col("vec_id") % 7 === 3)
       val centroids = graft.ops.IvfOps.train(base)
       graft.ops.IvfOps.assign(base, centroids)
-        .write.mode("overwrite").parquet(ivfIncBasePath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_inc_base", dir))
       graft.ops.IvfOps.assign(delta, centroids)
-        .write.mode("overwrite").parquet(ivfIncDeltaPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_inc_delta", dir))
       graft.ops.IvfOps.probes(e, centroids, numQueries = 10, nprobe = 2)
-        .write.mode("overwrite").parquet(ivfIncProbePath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_inc_probe", dir))
       graft.ops.IvfOps.topKFrom(e,
-        s.read.parquet(ivfIncBasePath(dir))
-          .unionByName(s.read.parquet(ivfIncDeltaPath(dir))),
-        s.read.parquet(ivfIncProbePath(dir)), numQueries = 10, topK = 10)
+        s.read.parquet(SparkEntry.dumpPath("ivf_inc_base", dir))
+          .unionByName(s.read.parquet(SparkEntry.dumpPath("ivf_inc_delta", dir))),
+        s.read.parquet(SparkEntry.dumpPath("ivf_inc_probe", dir)), numQueries = 10, topK = 10)
     }),
 
     // the maintenance DECISION table for p149's incremental index: per
@@ -1979,12 +1898,12 @@ object PipelineOpsQueries {
       val delta = e.where(col("vec_id") % 7 === 3)
       val centroids = graft.ops.IvfOps.train(base)
       graft.ops.IvfOps.assign(base, centroids)
-        .write.mode("overwrite").parquet(ivfIncBasePath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_inc_base", dir))
       graft.ops.IvfOps.assign(delta, centroids)
-        .write.mode("overwrite").parquet(ivfIncDeltaPath(dir))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("ivf_inc_delta", dir))
       graft.ops.IvfOps.cellCensus(
-        s.read.parquet(ivfIncBasePath(dir)),
-        s.read.parquet(ivfIncDeltaPath(dir)), k = 16)
+        s.read.parquet(SparkEntry.dumpPath("ivf_inc_base", dir)),
+        s.read.parquet(SparkEntry.dumpPath("ivf_inc_delta", dir)), k = 16)
     }),
 
     // INCREMENTAL graph insert (the HNSW insertion primitive, batched):
@@ -2009,8 +1928,8 @@ object PipelineOpsQueries {
       // to the r5 per-ef union (spec-pinned per-slice equality)
       graft.ops.GraphAnnOps.beamVisitedSweep(e, g1, Seq(2, 8, 32),
           numQueries = 10, hops = 5)
-        .write.mode("overwrite").parquet(graphInsertSweepPath(dir))
-      graphRecallTable(s, e, s.read.parquet(graphInsertSweepPath(dir)))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("graph_insert_sweep", dir))
+      graphRecallTable(s, e, s.read.parquet(SparkEntry.dumpPath("graph_insert_sweep", dir)))
     }),
 
     // graph-ANN tuning table beside p89's IVF sweep: recall@10 vs the
@@ -2025,8 +1944,8 @@ object PipelineOpsQueries {
       // to the r5 per-ef union (spec-pinned per-slice equality)
       graft.ops.GraphAnnOps.beamVisitedSweep(e, g, Seq(2, 8, 32),
           numQueries = 10, hops = 5)
-        .write.mode("overwrite").parquet(beamSweepPath(dir))
-      graphRecallTable(s, e, s.read.parquet(beamSweepPath(dir)))
+        .write.mode("overwrite").parquet(SparkEntry.dumpPath("beam_sweep", dir))
+      graphRecallTable(s, e, s.read.parquet(SparkEntry.dumpPath("beam_sweep", dir)))
     })
   )
 
@@ -2766,7 +2685,7 @@ object PipelineOpsQueries {
            AS ratio_ppm,
          CAST(sum(CASE WHEN deflate_bytes * 100 < raw_bytes * 35
                        THEN 1 ELSE 0 END) AS BIGINT) AS n_repetitive
-         FROM read_parquet('${deflateDumpPath(dir)}/*.parquet')
+         FROM read_parquet('${SparkEntry.dumpPath("deflate_dump", dir)}/*.parquet')
          GROUP BY source ORDER BY source""",
     // same quasi-identifier grouping + histogram + running below-k total
     "p103_k_anonymity" ->
@@ -2827,10 +2746,10 @@ object PipelineOpsQueries {
          qs AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 10),
          q AS (SELECT * FROM qv WHERE vec_id IN (SELECT vec_id FROM qs)),
          cb AS (SELECT subspace, code, dim, cval
-                FROM read_parquet('${pqCodebookPath(dir)}/*.parquet')),
+                FROM read_parquet('${SparkEntry.dumpPath("pq_codebook", dir)}/*.parquet')),
          sd AS (SELECT max(dim) + 1 AS subdim FROM cb),
          cd AS (SELECT vec_id, subspace, code
-                FROM read_parquet('${pqCodesPath(dir)}/*.parquet')),
+                FROM read_parquet('${SparkEntry.dumpPath("pq_codes", dir)}/*.parquet')),
          adc AS (SELECT q.vec_id AS query_id, cd.vec_id AS cand,
              CAST(sum((q.v - cb.cval) * (q.v - cb.cval)) AS BIGINT) AS dist
            FROM cd
@@ -2904,10 +2823,10 @@ object PipelineOpsQueries {
          qs AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 10),
          q AS (SELECT * FROM qv WHERE vec_id IN (SELECT vec_id FROM qs)),
          cb AS (SELECT subspace, code, dim, cval
-                FROM read_parquet('${pqRerankCodebookPath(dir)}/*.parquet')),
+                FROM read_parquet('${SparkEntry.dumpPath("pq_rr_codebook", dir)}/*.parquet')),
          sd AS (SELECT max(dim) + 1 AS subdim FROM cb),
          cd AS (SELECT vec_id, subspace, code
-                FROM read_parquet('${pqRerankCodesPath(dir)}/*.parquet')),
+                FROM read_parquet('${SparkEntry.dumpPath("pq_rr_codes", dir)}/*.parquet')),
          adc AS (SELECT q.vec_id AS query_id, cd.vec_id AS cand,
              CAST(sum((q.v - cb.cval) * (q.v - cb.cval)) AS BIGINT) AS dist
            FROM cd
@@ -3009,10 +2928,10 @@ object PipelineOpsQueries {
            FROM (SELECT vec_id, unnest(embedding) AS x,
                    unnest(range(0, len(embedding))) AS dim FROM embeddings)),
          cb AS (SELECT subspace, code, dim, cval
-                FROM read_parquet('${pqDriftCodebookPath(dir)}/*.parquet')),
+                FROM read_parquet('${SparkEntry.dumpPath("pq_drift_codebook", dir)}/*.parquet')),
          sd AS (SELECT max(dim) + 1 AS subdim FROM cb),
          cd AS (SELECT vec_id, subspace, code
-                FROM read_parquet('${pqDriftCodesPath(dir)}/*.parquet')),
+                FROM read_parquet('${SparkEntry.dumpPath("pq_drift_codes", dir)}/*.parquet')),
          err AS (SELECT cd.vec_id,
              CAST(sum((qv.v - cb.cval) * (qv.v - cb.cval)) AS BIGINT) AS err
            FROM cd
@@ -3180,7 +3099,7 @@ object PipelineOpsQueries {
                    WHERE n_inter * 100 >= (na + nb - n_inter) * 60),
          ex AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM exact),
          cand AS (SELECT bands, doc_a, doc_b
-                  FROM read_parquet('${bandSweepDumpPath(dir)}/*.parquet')),
+                  FROM read_parquet('${SparkEntry.dumpPath("band_sweep", dir)}/*.parquet')),
          lv AS (SELECT * FROM (VALUES (2), (4), (8), (16)) AS t(bands)),
          per AS (SELECT c.bands, count(*) AS n_candidates,
                    sum(CASE WHEN e.doc_a IS NOT NULL THEN 1 ELSE 0 END) AS n_hits
@@ -3198,9 +3117,9 @@ object PipelineOpsQueries {
     // by DuckDB's own cosine, intersected with its own brute ranking
     "p89_ivf_recall_sweep" ->
       s"""WITH a AS (SELECT * FROM
-             read_parquet('${ivfSweepAssignPath(dir)}/*.parquet')),
+             read_parquet('${SparkEntry.dumpPath("ivf_sweep_assign", dir)}/*.parquet')),
          p AS (SELECT * FROM
-             read_parquet('${ivfSweepProbePath(dir)}/*.parquet')),
+             read_parquet('${SparkEntry.dumpPath("ivf_sweep_probe", dir)}/*.parquet')),
          q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings ORDER BY vec_id LIMIT 10),
          cand AS (SELECT p.nprobe, p.query_id, e.vec_id AS neighbor_id,
@@ -3881,7 +3800,7 @@ object PipelineOpsQueries {
     // must be identical, not just overlapping
     "p127_phash_neardups" ->
       s"""WITH refs AS (SELECT ref FROM
-           read_parquet('${phashRefsPath(dir)}/*.parquet')),
+           read_parquet('${SparkEntry.dumpPath("phash_refs", dir)}/*.parquet')),
          bits AS (SELECT ref, k,
              CASE WHEN (ord(substr(ref,
                    CAST(((k // 8) * 9 + (k % 8)) % length(ref) + 1 AS INT),
@@ -3908,7 +3827,7 @@ object PipelineOpsQueries {
       s"""SELECT format, count(*) AS n_media,
          CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
          max(width) AS max_width, max(height) AS max_height
-         FROM read_parquet('${mediaDumpPath(dir)}/*.parquet')
+         FROM read_parquet('${SparkEntry.dumpPath("media_dump", dir)}/*.parquet')
          GROUP BY format ORDER BY format""",
     "p14_token_df" ->
       """WITH tok AS (SELECT doc_id,
@@ -3966,11 +3885,11 @@ object PipelineOpsQueries {
          1900 AS padded_width,
          CAST(floor(CAST(height AS DOUBLE) * 1800 / width) AS INT) + 100 AS padded_height,
          CAST(floor((n_frames + 29) / 30.0) AS INT) AS n_sampled_frames
-         FROM read_parquet('${mediaDumpPath(dir)}/*.parquet')""",
+         FROM read_parquet('${SparkEntry.dumpPath("media_dump", dir)}/*.parquet')""",
     // bucket-restricted ANN ranking recomputed over the bucket dump p08
     // materializes at query time (count-keyed path shared with the query)
     "p08_ann_lsh_topk" ->
-      s"""WITH b AS (SELECT * FROM read_parquet('${lshBucketDumpPath(dir)}/*.parquet')),
+      s"""WITH b AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("lsh_buckets", dir)}/*.parquet')),
          wb AS (SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS emb, b.bucket
                 FROM embeddings e JOIN b USING (vec_id)),
          q AS (SELECT vec_id AS query_id, emb AS q_emb, bucket AS q_bucket
@@ -3987,8 +3906,8 @@ object PipelineOpsQueries {
          WHERE rank <= 10 ORDER BY query_id, rank""",
     // IVF candidate sets re-ranked from the dumped assignment/probe tables
     "p13_ann_ivf_topk" ->
-      s"""WITH a AS (SELECT * FROM read_parquet('${ivfAssignPath(dir)}/*.parquet')),
-         p AS (SELECT * FROM read_parquet('${ivfProbePath(dir)}/*.parquet')),
+      s"""WITH a AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("ivf_assign", dir)}/*.parquet')),
+         p AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("ivf_probe", dir)}/*.parquet')),
          q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings ORDER BY vec_id LIMIT 10),
          cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
@@ -4247,7 +4166,7 @@ object PipelineOpsQueries {
       s"""WITH m AS (SELECT doc_id, media_ref,
              CAST(n_frames AS BIGINT) AS n_frames,
              CAST(least(8, n_frames) AS BIGINT) AS sample_k
-           FROM read_parquet('${mediaDumpPath(dir)}/*.parquet'))
+           FROM read_parquet('${SparkEntry.dumpPath("media_dump", dir)}/*.parquet'))
          SELECT doc_id, media_ref, n_frames, sample_k,
            CAST((j * n_frames) // sample_k AS BIGINT) AS frame_idx,
            CAST(((j * n_frames) // sample_k * 1001000) // 24000 AS BIGINT)
@@ -4598,7 +4517,7 @@ object PipelineOpsQueries {
     // hyperplane hash is engine code; the dump pins it), then every
     // candidate pair re-verified against DuckDB's own cosine
     "p40_embed_near_dups" ->
-      s"""WITH b AS (SELECT * FROM read_parquet('${multiBucketDumpPath(dir)}/*.parquet')),
+      s"""WITH b AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("lsh_multi", dir)}/*.parquet')),
          cand AS (SELECT DISTINCT l.vec_id AS vec_a, r.vec_id AS vec_b
                   FROM b l JOIN b r ON l.table_id = r.table_id
                     AND l.bucket = r.bucket AND l.vec_id < r.vec_id)
@@ -4704,7 +4623,7 @@ object PipelineOpsQueries {
          exact AS (SELECT doc_a, doc_b FROM pairs
                    WHERE n_inter * 100 >= (na + nb - n_inter) * 60),
          cand AS (SELECT doc_a, doc_b
-                  FROM read_parquet('${lshRecallDumpPath(dir)}/*.parquet')),
+                  FROM read_parquet('${SparkEntry.dumpPath("lsh_recall", dir)}/*.parquet')),
          hit AS (SELECT * FROM exact JOIN cand USING (doc_a, doc_b))
          SELECT CAST((SELECT count(*) FROM exact) AS BIGINT) AS n_exact,
                 CAST((SELECT count(*) FROM cand) AS BIGINT) AS n_candidates,
@@ -4816,7 +4735,7 @@ object PipelineOpsQueries {
              WHERE doc_id % 2 = 0
            ) GROUP BY tok),
          nt AS (SELECT sum(exact_cnt) AS n FROM ex),
-         d AS (SELECT * FROM read_parquet('${mgDumpPath(dir)}/*.parquet')),
+         d AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("mg_summary", dir)}/*.parquet')),
          heavy AS (SELECT token, exact_cnt FROM ex, nt
                    WHERE exact_cnt > nt.n // 65)
          SELECT h.token, h.exact_cnt,
@@ -5089,7 +5008,7 @@ object PipelineOpsQueries {
     // dumped assignment; list_cosine_similarity matches the engine's
     // codegen'd cosine bit-for-bit (established by p12/p13/p28/p40)
     "p61_semdedup" ->
-      s"""WITH a AS (SELECT * FROM read_parquet('${semDedupAssignPath(dir)}/*.parquet')),
+      s"""WITH a AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("semdedup_assign", dir)}/*.parquet')),
          v AS (SELECT a.cell, e.vec_id, CAST(e.embedding AS DOUBLE[]) AS emb
                FROM a JOIN embeddings e USING (vec_id))
          SELECT r.vec_id, CAST(l.cell AS INT) AS cell,
@@ -5474,7 +5393,7 @@ object PipelineOpsQueries {
     "p140_graph_beam_topk" ->
       s"""WITH vis AS (SELECT CAST(query_id AS BIGINT) AS query_id,
                CAST(node_id AS BIGINT) AS node_id
-             FROM read_parquet('${beamVisitedPath(dir)}/*.parquet')),
+             FROM read_parquet('${SparkEntry.dumpPath("beam_visited", dir)}/*.parquet')),
          q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings ORDER BY vec_id LIMIT 10),
          sc AS (SELECT v.query_id, v.node_id AS neighbor_id,
@@ -5497,7 +5416,7 @@ object PipelineOpsQueries {
       s"""WITH vis AS (SELECT CAST(ef AS BIGINT) AS ef,
                CAST(query_id AS BIGINT) AS query_id,
                CAST(node_id AS BIGINT) AS node_id
-             FROM read_parquet('${descentSweepPath(dir)}/*.parquet')),
+             FROM read_parquet('${SparkEntry.dumpPath("descent_sweep", dir)}/*.parquet')),
          q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings ORDER BY vec_id LIMIT 10),
          sc AS (SELECT v.ef, v.query_id, v.node_id AS neighbor_id,
@@ -5530,10 +5449,10 @@ object PipelineOpsQueries {
     // oracle over the incremental dumps: inserted vectors that the probes
     // reach MUST appear exactly where the exhaustive re-rank puts them
     "p149_ivf_incremental" ->
-      s"""WITH a AS (SELECT * FROM read_parquet('${ivfIncBasePath(dir)}/*.parquet')
+      s"""WITH a AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("ivf_inc_base", dir)}/*.parquet')
                UNION ALL
-             SELECT * FROM read_parquet('${ivfIncDeltaPath(dir)}/*.parquet')),
-         p AS (SELECT * FROM read_parquet('${ivfIncProbePath(dir)}/*.parquet')),
+             SELECT * FROM read_parquet('${SparkEntry.dumpPath("ivf_inc_delta", dir)}/*.parquet')),
+         p AS (SELECT * FROM read_parquet('${SparkEntry.dumpPath("ivf_inc_probe", dir)}/*.parquet')),
          q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings ORDER BY vec_id LIMIT 10),
          cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
@@ -5555,10 +5474,10 @@ object PipelineOpsQueries {
     // ppm share and the >200%-of-ideal retrain bit, every cell present
     "p150_ivf_cell_census" ->
       s"""WITH b AS (SELECT cell, count(*) AS n_base
-             FROM read_parquet('${ivfIncBasePath(dir)}/*.parquet')
+             FROM read_parquet('${SparkEntry.dumpPath("ivf_inc_base", dir)}/*.parquet')
              GROUP BY 1),
          d AS (SELECT cell, count(*) AS n_delta
-             FROM read_parquet('${ivfIncDeltaPath(dir)}/*.parquet')
+             FROM read_parquet('${SparkEntry.dumpPath("ivf_inc_delta", dir)}/*.parquet')
              GROUP BY 1),
          cells AS (SELECT unnest(range(16)) AS cell),
          j AS (SELECT CAST(c.cell AS BIGINT) AS cell,
@@ -5579,7 +5498,7 @@ object PipelineOpsQueries {
       s"""WITH vis AS (SELECT CAST(ef AS BIGINT) AS ef,
                CAST(query_id AS BIGINT) AS query_id,
                CAST(node_id AS BIGINT) AS node_id
-             FROM read_parquet('${graphInsertSweepPath(dir)}/*.parquet')),
+             FROM read_parquet('${SparkEntry.dumpPath("graph_insert_sweep", dir)}/*.parquet')),
          q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings ORDER BY vec_id LIMIT 10),
          sc AS (SELECT v.ef, v.query_id, v.node_id AS neighbor_id,
@@ -5614,7 +5533,7 @@ object PipelineOpsQueries {
       s"""WITH vis AS (SELECT CAST(ef AS BIGINT) AS ef,
                CAST(query_id AS BIGINT) AS query_id,
                CAST(node_id AS BIGINT) AS node_id
-             FROM read_parquet('${beamSweepPath(dir)}/*.parquet')),
+             FROM read_parquet('${SparkEntry.dumpPath("beam_sweep", dir)}/*.parquet')),
          q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
                FROM embeddings ORDER BY vec_id LIMIT 10),
          sc AS (SELECT v.ef, v.query_id, v.node_id AS neighbor_id,

@@ -1208,7 +1208,7 @@ object RelationalQueries {
     // inference must not trip on the bad footer either) and the census
     // sees exactly the good rows. The no-flag read throws — spec-pinned.
     "q108_corrupt_skip" -> ((s, dir) => {
-      val base = s"/tmp/graft_corrupt_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("corrupt", dir)
       val bp = new org.apache.hadoop.fs.Path(base)
       val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(bp)) fs.delete(bp, true)
@@ -1255,7 +1255,7 @@ object RelationalQueries {
     // TableIOSpec pins the sharper facts (expired version unreadable,
     // orphan dir gone, kept versions byte-stable).
     "q107_snapshot_expiry" -> ((s, dir) => {
-      val base = s"/tmp/graft_expiry_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("expiry", dir)
       val bp = new org.apache.hadoop.fs.Path(base)
       val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(bp)) fs.delete(bp, true)
@@ -1485,7 +1485,7 @@ object RelationalQueries {
 
     "q30_iceberg_maintenance" -> ((s, dir) => {
       import s.implicits._
-      val base = s"/tmp/graft_iceberg_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("iceberg", dir)
       val snap0 = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       graft.io.TableIO.writePartitionedClustered(snap0, s"$base/snap",
@@ -1529,7 +1529,7 @@ object RelationalQueries {
     // content-lossless; the file-count/no-shuffle contract is pinned by
     // TableIOSpec
     "q33_compaction" -> ((s, dir) => {
-      val base = s"/tmp/graft_compact_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("compact", dir)
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .repartition(64)
@@ -1742,7 +1742,7 @@ object RelationalQueries {
     // ~7/8 of row groups on the z layout and nothing on an x-clustered
     // one). bits=6 covers the 64×64 derived key space exactly.
     "q45_zorder_scan" -> ((s, dir) => {
-      val base = s"/tmp/graft_zorder_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("zorder", dir)
       val d = t(s, dir, "documents").select(col("doc_id"),
         (col("n_chars") % 64).as("cx"), (col("doc_id") % 64).as("cy"))
       graft.io.TableIO.writeZOrdered(d, base, "cx", "cy",
@@ -1863,7 +1863,7 @@ object RelationalQueries {
     // byte-for-byte while 'en' carries the delta — the idempotent
     // reprocess-one-slice primitive of a 10^12-doc ingest loop.
     "q87_dynamic_overwrite" -> ((s, dir) => {
-      val base = s"/tmp/graft_dynovr_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("dynovr", dir)
       val bp = new org.apache.hadoop.fs.Path(base)
       val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(bp)) fs.delete(bp, true)
@@ -2241,7 +2241,7 @@ object RelationalQueries {
     // table, verifies. The evolution cutoff is the period midpoint
     // (1-row agg — driver-side by design, like CheckpointRunner's).
     "q102_partition_evolution" -> ((s, dir) => {
-      val base = s"/tmp/graft_partevo_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("partevo", dir)
       val bp = new org.apache.hadoop.fs.Path(base)
       val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(bp)) fs.delete(bp, true)
@@ -2766,7 +2766,7 @@ object RelationalQueries {
     // oracle computes from the parquet source directly (DuckDB never
     // reads the ORC bytes — equality IS the losslessness proof)
     "q64_orc_roundtrip" -> ((s, dir) => {
-      val path = s"/tmp/graft_orc_${graft.SparkEntry.docCountFor(dir)}"
+      val path = SparkEntry.dumpPath("orc", dir)
       t(s, dir, "documents").select("doc_id", "text", "source", "n_chars")
         .write.mode("overwrite").format("orc").save(path)
       s.read.format("orc").load(path)
@@ -2862,7 +2862,7 @@ object RelationalQueries {
     // THROUGH ITS MANIFEST after v2 exists and rolls both up — isolation
     // of published snapshots is the thing under test
     "q54_time_travel" -> ((s, dir) => {
-      val base = s"/tmp/graft_timetravel_${SparkEntry.docCountFor(dir)}"
+      val base = SparkEntry.dumpPath("timetravel", dir)
       // fresh table: stale manifests from a prior run would make
       // readSnapshot(latest) resolve PAST the version being rebuilt (and
       // the v2 commit would then overwrite its own input)

@@ -68,45 +68,15 @@ object SparkEntry {
     s"/root/repo/fixtures/golden_extract${suffix}_${docCountFor(dir)}.parquet"
   }
 
-  def extractDumpPath(dir: String): String =
-    s"/tmp/graft_extract_dump_${docCountFor(dir)}"
+  /** A query's /tmp dump location, keyed by the sf dir's doc count so
+    * Verify (sf0.01) and Bench (sf0.1) never clobber each other. Queries
+    * and their `oracleSqlFor(dir)` SQL both call this, so query and oracle
+    * can never read different dumps regardless of which sf the driver
+    * runs. */
+  def dumpPath(tag: String, dir: String): String =
+    s"/tmp/graft_${tag}_${docCountFor(dir)}"
 
-  def spansDumpPath(dir: String): String =
-    s"/tmp/graft_spans_dump_${docCountFor(dir)}"
-
-  def mmCostDumpPath(dir: String): String =
-    s"/tmp/graft_mm_cost_dump_${docCountFor(dir)}"
-
-  def spanAuditDumpPath(dir: String): String =
-    s"/tmp/graft_span_audit_${docCountFor(dir)}"
-
-  def renderDumpPath(dir: String): String =
-    s"/tmp/graft_render_dump_${docCountFor(dir)}"
-
-  def htmlStripDumpPath(dir: String): String =
-    s"/tmp/graft_html_strip_dump_${docCountFor(dir)}"
-
-  def mediaRefsDumpPath(dir: String): String =
-    s"/tmp/graft_media_refs_dump_${docCountFor(dir)}"
-
-  def mmCurationStatsPath(dir: String): String =
-    s"/tmp/graft_mm_curation_stats_${docCountFor(dir)}"
-
-  def mmCurationCostPath(dir: String): String =
-    s"/tmp/graft_mm_curation_cost_${docCountFor(dir)}"
-
-  def mediaCatalogDumpPath(dir: String): String =
-    s"/tmp/graft_media_catalog_dump_${docCountFor(dir)}"
-
-  def observedDumpPath(dir: String): String =
-    s"/tmp/graft_observed_dump_${docCountFor(dir)}"
-  def captionDumpPath(dir: String): String =
-    s"/tmp/graft_caption_dump_${docCountFor(dir)}"
-  def lineageRunPath(dir: String): String =
-    s"/tmp/graft_lineage_run_${docCountFor(dir)}"
-  def lineageDumpPath(dir: String): String =
-    s"/tmp/graft_lineage_dump_${docCountFor(dir)}"
-
+  private val modeDumpsWritten = scala.collection.mutable.Set.empty[String]
   /** ONE shared mode-tagged extraction dump per sf feeding the whole
     * mode-A/B query family (x21 flip census, x25 rescue pivot, x32 CER) —
     * round-3 VERDICT "What's wrong #2": each of those queries needs BOTH
@@ -116,11 +86,8 @@ object SparkEntry {
     * change cannot serve a stale dump), and any one query run alone still
     * computes exactly what it needs — per-query oracle isolation is
     * preserved because the oracle re-reads the same dumped bytes. */
-  def modeDumpPath(dir: String): String =
-    s"/tmp/graft_mode_dump_${docCountFor(dir)}"
-  private val modeDumpsWritten = scala.collection.mutable.Set.empty[String]
   def modeDump(s: SparkSession, dir: String): DataFrame = {
-    val p = modeDumpPath(dir)
+    val p = dumpPath("mode_dump", dir)
     modeDumpsWritten.synchronized {
       if (!modeDumpsWritten.contains(p)) {
         def proj(m: String, useDonut: Boolean): DataFrame =
@@ -138,24 +105,6 @@ object SparkEntry {
     }
     s.read.parquet(p)
   }
-  def kindDumpPath(dir: String): String =
-    s"/tmp/graft_kind_dump_${docCountFor(dir)}"
-  def mediaSkewDumpPath(dir: String): String =
-    s"/tmp/graft_media_skew_dump_${docCountFor(dir)}"
-  def costTopkDumpPath(dir: String): String =
-    s"/tmp/graft_cost_topk_dump_${docCountFor(dir)}"
-  def spanLenDumpPath(dir: String): String =
-    s"/tmp/graft_span_len_dump_${docCountFor(dir)}"
-  def errorParetoDumpPath(dir: String): String =
-    s"/tmp/graft_error_pareto_dump_${docCountFor(dir)}"
-  def typeKindDumpPath(dir: String): String =
-    s"/tmp/graft_type_kind_dump_${docCountFor(dir)}"
-  def offsetGapDumpPath(dir: String): String =
-    s"/tmp/graft_offset_gap_dump_${docCountFor(dir)}"
-  def recordDumpPath(dir: String): String =
-    s"/tmp/graft_record_dump_${docCountFor(dir)}"
-  def recordValsDumpPath(dir: String): String =
-    s"/tmp/graft_record_vals_dump_${docCountFor(dir)}"
 
   /** x31's probe list: record fields that are scalar STRINGS in every
     * extractor that emits them (nested subjects/result excluded — engines
@@ -171,7 +120,7 @@ object SparkEntry {
     * extraction itself stays parity-gated (ReferenceParitySpec), the
     * relational rollup logic becomes driver-oracled. */
   private def dumpedResults(s: SparkSession, dir: String): DataFrame = {
-    val path = extractDumpPath(dir)
+    val path = dumpPath("extract_dump", dir)
     ExtractionPipeline.run(docTable(s, dir)).toDF()
       .select(col("doc_id"), col("document_type"), col("is_valid"),
         col("ocr_accuracy_score"), col("validation_error"),
@@ -251,7 +200,7 @@ object SparkEntry {
     "x08_span_runs" -> ((s, dir) => {
       val docs = docTable(s, dir)
       graft.ops.InterleaveOps.spanKindDump(docs)
-        .write.mode("overwrite").parquet(spansDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("spans_dump", dir))
       graft.ops.InterleaveOps.spanRunStats(docs)
     }),
     // multimodal sequence packing: text tokens + 64 tokens per media span
@@ -259,9 +208,9 @@ object SparkEntry {
     // sum as p33; the oracle windows over the dumped per-doc cost table
     "x09_mm_packing" -> ((s, dir) => {
       graft.ops.InterleaveOps.mmCosts(docTable(s, dir))
-        .write.mode("overwrite").parquet(mmCostDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("mm_cost_dump", dir))
       graft.ops.PackingOps.packChunksCost(
-        s.read.parquet(mmCostDumpPath(dir)), col("cost"), capacity = 1024)
+        s.read.parquet(dumpPath("mm_cost_dump", dir)), col("cost"), capacity = 1024)
     }),
     // checkpoint/resume driver-verified end to end (north_rule: "resumable
     // from checkpoint with per-partition lineage + metrics"): run 1 CRASHES
@@ -271,7 +220,7 @@ object SparkEntry {
     // oracle aggregates the x02 extraction dump, so any doc lost, doubled
     // or altered across the crash/resume boundary fails the driver hash.
     "x10_checkpoint_resume" -> ((s, dir) => {
-      val out = s"/tmp/graft_ckpt_driver_${docCountFor(dir)}"
+      val out = dumpPath("ckpt_driver", dir)
       new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
       dumpedResults(s, dir) // (re)write the dump the oracle reads
       val docs = docTable(s, dir)
@@ -308,7 +257,7 @@ object SparkEntry {
         else d
       }
       graft.ops.InterleaveOps.spanOffsetDump(corrupted)
-        .write.mode("overwrite").parquet(spanAuditDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("span_audit", dir))
       graft.ops.InterleaveOps.spanAudit(corrupted)
     }),
     // interleaved→training-text rendering (the tokenizer-ready flattening
@@ -319,7 +268,7 @@ object SparkEntry {
     "x12_render_interleaved" -> ((s, dir) => {
       val docs = docTable(s, dir)
       graft.ops.InterleaveOps.spanFullDump(docs)
-        .write.mode("overwrite").parquet(renderDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("render_dump", dir))
       graft.ops.InterleaveOps.renderInterleaved(docs).orderBy(col("doc_id"))
     }),
     // HTML boilerplate-strip path driven distributed (north_rule: "HTML
@@ -352,8 +301,8 @@ object SparkEntry {
           case (line, i) => (id, i.toLong, line)
         }
       }.toDF("doc_id", "ord", "line")
-        .write.mode("overwrite").parquet(htmlStripDumpPath(dir))
-      s.read.parquet(htmlStripDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("html_strip_dump", dir))
+      s.read.parquet(dumpPath("html_strip_dump", dir))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_lines"),
           sum(length(col("line"))).cast("long").as("n_chars"),
@@ -379,14 +328,14 @@ object SparkEntry {
           (n, if (n % 11 == 4) sp.media_ref + "#dangling" else sp.media_ref)
         }
       }.toDF("doc_id", "media_ref")
-        .write.mode("overwrite").parquet(mediaRefsDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("media_refs_dump", dir))
       graft.ops.MultimodalOps.mediaTable(docs)
         .map(_.media_ref).distinct()
         .filter(r => graft.ops.TextOps.md5Low63(r + "|retire") % 13 != 2)
         .toDF("media_ref")
-        .write.mode("overwrite").parquet(mediaCatalogDumpPath(dir))
-      val r = s.read.parquet(mediaRefsDumpPath(dir))
-      val m = s.read.parquet(mediaCatalogDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("media_catalog_dump", dir))
+      val r = s.read.parquet(dumpPath("media_refs_dump", dir))
+      val m = s.read.parquet(dumpPath("media_catalog_dump", dir))
       val dangling = r.join(m, Seq("media_ref"), "left_anti")
       val orphaned = m.join(r, Seq("media_ref"), "left_anti")
       r.agg(count(lit(1)).as("n_refs"))
@@ -404,13 +353,13 @@ object SparkEntry {
     "x15_mm_curation" -> ((s, dir) => {
       val docs = docTable(s, dir)
       graft.ops.InterleaveOps.renderInterleaved(docs)
-        .write.mode("overwrite").parquet(mmCurationStatsPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("mm_curation_stats", dir))
       graft.ops.InterleaveOps.mmCosts(docs)
-        .write.mode("overwrite").parquet(mmCurationCostPath(dir))
-      val surv = s.read.parquet(mmCurationStatsPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("mm_curation_cost", dir))
+      val surv = s.read.parquet(dumpPath("mm_curation_stats", dir))
         .filter(col("n_media") >= 1 && col("rendered_len") >= 64)
         .select(col("doc_id"))
-      val costs = s.read.parquet(mmCurationCostPath(dir))
+      val costs = s.read.parquet(dumpPath("mm_curation_cost", dir))
         .join(surv, "doc_id")
       graft.ops.PackingOps.packChunksCost(costs, col("cost"),
           capacity = 1024)
@@ -433,7 +382,7 @@ object SparkEntry {
         .select(col("doc_id"), col("is_valid"),
           size(col("spans")).as("n_spans"))
       val m = graft.pipe.Metrics.observedWrite(res,
-        observedDumpPath(dir), Seq(
+        dumpPath("observed_dump", dir), Seq(
           count(lit(1)).as("n_docs"),
           sum(col("n_spans")).cast("long").as("sum_spans"),
           sum(when(col("is_valid"), 1L).otherwise(0L)).as("n_valid")))
@@ -451,7 +400,7 @@ object SparkEntry {
     // table and the engine's lineage parquet are the oracle's inputs, so
     // DuckDB re-derives the same audit from identical bytes.
     "x20_lineage_audit" -> ((s, dir) => {
-      val out = lineageRunPath(dir)
+      val out = dumpPath("lineage_run", dir)
       new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
       val runner = new graft.pipe.CheckpointRunner(out, buckets = 32,
         groups = 4)
@@ -459,8 +408,8 @@ object SparkEntry {
       s.read.parquet(s"$out/results")
         .select(col("group"), col("doc_id"),
           size(col("spans")).as("n_spans"), col("is_valid"))
-        .write.mode("overwrite").parquet(lineageDumpPath(dir))
-      val actual = s.read.parquet(lineageDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("lineage_dump", dir))
+      val actual = s.read.parquet(dumpPath("lineage_dump", dir))
         .groupBy(col("group").cast("int").as("bucket_group"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_spans")).cast("long").as("sum_spans"),
@@ -487,7 +436,7 @@ object SparkEntry {
     "x17_caption_pairs" -> ((s, dir) => {
       val docs = docTable(s, dir)
       graft.ops.InterleaveOps.spanFullDump(docs)
-        .write.mode("overwrite").parquet(captionDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("caption_dump", dir))
       graft.ops.InterleaveOps.captionPairs(docs)
         .orderBy(col("doc_id"), col("ord"))
     }),
@@ -500,7 +449,7 @@ object SparkEntry {
     "x22_kind_transitions" -> ((s, dir) => {
       val docs = docTable(s, dir)
       graft.ops.InterleaveOps.spanKindDump(docs)
-        .write.mode("overwrite").parquet(kindDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("kind_dump", dir))
       graft.ops.InterleaveOps.kindTransitions(docs)
     }),
 
@@ -515,8 +464,8 @@ object SparkEntry {
       ExtractionPipeline.run(docTable(s, dir)).toDF()
         .select(col("document_type"), col("validation_error"))
         .where(col("validation_error").isNotNull)
-        .write.mode("overwrite").parquet(errorParetoDumpPath(dir))
-      val cnt = s.read.parquet(errorParetoDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("error_pareto_dump", dir))
+      val cnt = s.read.parquet(dumpPath("error_pareto_dump", dir))
         .groupBy(col("document_type"), col("validation_error"))
         .agg(count(lit(1)).as("n"))
       val ord = Window.partitionBy(col("document_type"))
@@ -543,8 +492,8 @@ object SparkEntry {
       docTable(s, dir).flatMap(d => d.spans.iterator.map(sp =>
           (sp.kind, Option(sp.text).map(_.length.toLong).getOrElse(0L))))
         .toDF("kind", "len")
-        .write.mode("overwrite").parquet(spanLenDumpPath(dir))
-      val d = s.read.parquet(spanLenDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("span_len_dump", dir))
+      val d = s.read.parquet(dumpPath("span_len_dump", dir))
       val ranked = d
         .withColumn("rn", row_number()
           .over(Window.partitionBy(col("kind")).orderBy(col("len")))
@@ -604,8 +553,8 @@ object SparkEntry {
           expr("aggregate(spans, 0L, (acc, sp) -> acc + " +
             "CASE WHEN sp.kind = 'media' THEN 4096L " +
             "ELSE length(coalesce(sp.text, '')) END)").as("cost"))
-        .write.mode("overwrite").parquet(costTopkDumpPath(dir))
-      val d = s.read.parquet(costTopkDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("cost_topk_dump", dir))
+      val d = s.read.parquet(dumpPath("cost_topk_dump", dir))
       val top = d.select(col("document_type"), col("doc_num"),
           col("cost").cast("double"))
         .as[(String, Long, Double)]
@@ -635,8 +584,8 @@ object SparkEntry {
     // 10-row result.
     "x23_media_skew" -> ((s, dir) => {
       graft.ops.InterleaveOps.spanKindDump(docTable(s, dir))
-        .write.mode("overwrite").parquet(mediaSkewDumpPath(dir))
-      s.read.parquet(mediaSkewDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("media_skew_dump", dir))
+      s.read.parquet(dumpPath("media_skew_dump", dir))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_spans"),
           sum(when(col("kind") === "media", 1L).otherwise(0L)).as("n_media"))
@@ -662,8 +611,8 @@ object SparkEntry {
       ExtractionPipeline.run(docTable(s, dir)).toDF()
         .select(col("document_type"), explode(col("spans")).as("sp"))
         .select(col("document_type"), col("sp.kind").as("kind"))
-        .write.mode("overwrite").parquet(typeKindDumpPath(dir))
-      s.read.parquet(typeKindDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("type_kind_dump", dir))
+      s.read.parquet(dumpPath("type_kind_dump", dir))
         .groupBy(col("document_type"), col("kind"))
         .agg(count(lit(1)).as("n_spans"))
         .withColumn("type_total",
@@ -689,9 +638,9 @@ object SparkEntry {
         .select(col("doc_id"), col("document_type"),
           col("ord").cast("long").as("ord"),
           col("sp.offset").cast("long").as("offset"))
-        .write.mode("overwrite").parquet(offsetGapDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("offset_gap_dump", dir))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("ord"))
-      s.read.parquet(offsetGapDumpPath(dir))
+      s.read.parquet(dumpPath("offset_gap_dump", dir))
         .withColumn("gap", col("offset") - lag(col("offset"), 1).over(w))
         .where(col("gap").isNotNull)
         .groupBy(col("document_type"))
@@ -713,8 +662,8 @@ object SparkEntry {
     "x30_field_census" -> ((s, dir) => {
       ExtractionPipeline.run(docTable(s, dir)).toDF()
         .select(col("doc_id"), col("document_type"), col("record_json"))
-        .write.mode("overwrite").parquet(recordDumpPath(dir))
-      s.read.parquet(recordDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("record_dump", dir))
+      s.read.parquet(dumpPath("record_dump", dir))
         .select(col("document_type"),
           explode(expr("json_object_keys(record_json)")).as("field"))
         .groupBy(col("document_type"), col("field"))
@@ -734,11 +683,11 @@ object SparkEntry {
     "x31_field_value_census" -> ((s, dir) => {
       ExtractionPipeline.run(docTable(s, dir)).toDF()
         .select(col("doc_id"), col("document_type"), col("record_json"))
-        .write.mode("overwrite").parquet(recordValsDumpPath(dir))
+        .write.mode("overwrite").parquet(dumpPath("record_vals_dump", dir))
       val fields = scalarRecordFields
       val probes = array(fields.map(f => struct(lit(f).as("field"),
         get_json_object(col("record_json"), s"$$.$f").as("v"))): _*)
-      s.read.parquet(recordValsDumpPath(dir))
+      s.read.parquet(dumpPath("record_vals_dump", dir))
         .select(col("document_type"), explode(probes).as("p"))
         .select(col("document_type"), col("p.field").as("field"),
           col("p.v").as("v"))
@@ -831,18 +780,18 @@ object SparkEntry {
            CAST(sum(round(ocr_accuracy_score * 100)) AS BIGINT) AS sum_ocr_cents,
            CAST(sum(n_spans) AS BIGINT) AS sum_spans,
            CAST(sum(CASE WHEN validation_error <> '' THEN 1 ELSE 0 END) AS BIGINT) AS validation_failures
-           FROM read_parquet('${extractDumpPath(dir)}/*.parquet')
+           FROM read_parquet('${dumpPath("extract_dump", dir)}/*.parquet')
            GROUP BY document_type, is_valid ORDER BY document_type, is_valid""",
       "x03_classify_counts" ->
         s"""SELECT document_type, count(*) AS doc_count,
            CAST(sum(CASE WHEN is_valid THEN 1 ELSE 0 END) AS BIGINT) AS valid_count
-           FROM read_parquet('${extractDumpPath(dir)}/*.parquet')
+           FROM read_parquet('${dumpPath("extract_dump", dir)}/*.parquet')
            GROUP BY document_type ORDER BY document_type""",
       "x18_error_taxonomy" ->
         s"""SELECT document_type, validation_error,
            CAST(count(*) AS BIGINT) AS n_docs,
            min(doc_id) AS example_doc
-           FROM read_parquet('${extractDumpPath(dir)}/*.parquet')
+           FROM read_parquet('${dumpPath("extract_dump", dir)}/*.parquet')
            GROUP BY document_type, validation_error
            ORDER BY document_type, validation_error""",
       "x19_confidence_calibration" ->
@@ -850,12 +799,12 @@ object SparkEntry {
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(CASE WHEN is_valid THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
            CAST(sum(n_spans) AS BIGINT) AS sum_spans
-           FROM read_parquet('${extractDumpPath(dir)}/*.parquet')
+           FROM read_parquet('${dumpPath("extract_dump", dir)}/*.parquet')
            GROUP BY 1 ORDER BY conf_bucket""",
       // same ranked cumulative pivot over the dumped failures
       "x28_error_pareto" ->
         s"""WITH c AS (SELECT document_type, validation_error, count(*) AS n
-               FROM read_parquet('${errorParetoDumpPath(dir)}/*.parquet')
+               FROM read_parquet('${dumpPath("error_pareto_dump", dir)}/*.parquet')
                GROUP BY 1, 2),
            r AS (SELECT document_type, validation_error, n,
                row_number() OVER (PARTITION BY document_type
@@ -873,7 +822,7 @@ object SparkEntry {
       // same rank-method percentiles over the dumped lengths
       "x26_span_len_percentiles" ->
         s"""WITH d AS (SELECT kind, len
-               FROM read_parquet('${spanLenDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("span_len_dump", dir)}/*.parquet')),
            ranked AS (SELECT kind, len,
                row_number() OVER (PARTITION BY kind ORDER BY len) AS rn,
                count(*) OVER (PARTITION BY kind) AS n FROM d)
@@ -888,7 +837,7 @@ object SparkEntry {
       // same rollup + share arithmetic from the dumped (type, kind) rows
       "x27_type_kind_mix" ->
         s"""WITH per AS (SELECT document_type, kind, count(*) AS n_spans
-               FROM read_parquet('${typeKindDumpPath(dir)}/*.parquet')
+               FROM read_parquet('${dumpPath("type_kind_dump", dir)}/*.parquet')
                GROUP BY document_type, kind),
            tot AS (SELECT document_type,
                CAST(sum(n_spans) AS BIGINT) AS type_total
@@ -905,7 +854,7 @@ object SparkEntry {
                .map("'" + _ + "'").mkString(", ")}]) AS field),
            v AS (SELECT document_type, f.field,
                    json_extract_string(record_json, '$$.' || f.field) AS v
-                 FROM read_parquet('${recordValsDumpPath(dir)}/*.parquet'), f)
+                 FROM read_parquet('${dumpPath("record_vals_dump", dir)}/*.parquet'), f)
            SELECT document_type, field,
              CAST(count(*) AS BIGINT) AS n_present,
              CAST(sum(strlen(v)) AS BIGINT) AS sum_octets,
@@ -920,13 +869,13 @@ object SparkEntry {
         s"""SELECT document_type, field, CAST(count(*) AS BIGINT) AS n_docs
            FROM (SELECT document_type,
                    unnest(json_keys(record_json)) AS field
-                 FROM read_parquet('${recordDumpPath(dir)}/*.parquet'))
+                 FROM read_parquet('${dumpPath("record_dump", dir)}/*.parquet'))
            GROUP BY document_type, field
            ORDER BY document_type, field""",
       // lag-window re-derivation of the gaps from the dumped offsets
       "x29_offset_gaps" ->
         s"""WITH d AS (SELECT doc_id, document_type, ord, "offset"
-               FROM read_parquet('${offsetGapDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("offset_gap_dump", dir)}/*.parquet')),
            g AS (SELECT document_type,
                "offset" - lag("offset") OVER (PARTITION BY doc_id
                                               ORDER BY ord) AS gap
@@ -946,7 +895,7 @@ object SparkEntry {
                  AS t_plain,
                max(CASE WHEN mode = 'plain' THEN valid END) AS v_plain,
                max(CASE WHEN mode = 'donut' THEN valid END) AS v_donut
-             FROM read_parquet('${modeDumpPath(dir)}/*.parquet')
+             FROM read_parquet('${dumpPath("mode_dump", dir)}/*.parquet')
              GROUP BY doc_id)
            SELECT t_plain AS document_type, count(*) AS n_docs,
              CAST(sum(CASE WHEN v_plain = 0 AND v_donut = 1
@@ -961,7 +910,7 @@ object SparkEntry {
       // the same (cost desc, doc_id asc) total order
       "x24_cost_topk" ->
         s"""WITH d AS (SELECT doc_id, document_type, cost
-               FROM read_parquet('${costTopkDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("cost_topk_dump", dir)}/*.parquet')),
            r AS (SELECT document_type, doc_id, cost,
                row_number() OVER (PARTITION BY document_type
                  ORDER BY cost DESC, doc_id) AS rnk FROM d)
@@ -972,7 +921,7 @@ object SparkEntry {
       "x23_media_skew" ->
         s"""WITH per AS (SELECT doc_id, count(*) AS n_spans,
                sum(CASE WHEN kind = 'media' THEN 1 ELSE 0 END) AS n_media
-             FROM read_parquet('${mediaSkewDumpPath(dir)}/*.parquet')
+             FROM read_parquet('${dumpPath("media_skew_dump", dir)}/*.parquet')
              GROUP BY doc_id)
            SELECT CAST(least(n_media * 1000000 // n_spans // 100000, 9)
                AS BIGINT) AS decile,
@@ -983,7 +932,7 @@ object SparkEntry {
       // transition matrix rebuilt with lag() windows over the kind dump
       "x22_kind_transitions" ->
         s"""WITH s AS (SELECT doc_id, ord, kind
-               FROM read_parquet('${kindDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("kind_dump", dir)}/*.parquet')),
            t AS (SELECT COALESCE(lag(kind)
                  OVER (PARTITION BY doc_id ORDER BY ord), '^') AS from_kind,
                kind AS to_kind FROM s)
@@ -1000,7 +949,7 @@ object SparkEntry {
              max(CASE WHEN mode = 'donut' THEN valid END) AS v_donut,
              max(CASE WHEN mode = 'plain' THEN n_spans END) AS s_plain,
              max(CASE WHEN mode = 'donut' THEN n_spans END) AS s_donut
-             FROM read_parquet('${modeDumpPath(dir)}/*.parquet')
+             FROM read_parquet('${dumpPath("mode_dump", dir)}/*.parquet')
              GROUP BY doc_id)
            SELECT t_plain AS document_type, count(*) AS n_docs,
              CAST(sum(CASE WHEN t_donut <> t_plain THEN 1 ELSE 0 END) AS BIGINT)
@@ -1017,7 +966,7 @@ object SparkEntry {
                AS document_type,
              max(CASE WHEN mode = 'plain' THEN record_json END) AS r_plain,
              max(CASE WHEN mode = 'donut' THEN record_json END) AS r_donut
-             FROM read_parquet('${modeDumpPath(dir)}/*.parquet')
+             FROM read_parquet('${dumpPath("mode_dump", dir)}/*.parquet')
              GROUP BY doc_id),
            m AS (SELECT document_type,
                levenshtein(substring(r_plain, 1, 512),
@@ -1037,7 +986,7 @@ object SparkEntry {
         s"""SELECT count(*) AS n_docs,
            CAST(sum(n_spans) AS BIGINT) AS sum_spans,
            CAST(sum(CASE WHEN is_valid THEN 1 ELSE 0 END) AS BIGINT) AS n_valid
-           FROM read_parquet('${observedDumpPath(dir)}/*.parquet')""",
+           FROM read_parquet('${dumpPath("observed_dump", dir)}/*.parquet')""",
       // the crash/resume path must reproduce the straight pipeline exactly:
       // same oracle table as x02 (the single-job extraction dump)
       "x10_checkpoint_resume" ->
@@ -1045,14 +994,14 @@ object SparkEntry {
            CAST(sum(round(ocr_accuracy_score * 100)) AS BIGINT) AS sum_ocr_cents,
            CAST(sum(n_spans) AS BIGINT) AS sum_spans,
            CAST(sum(CASE WHEN validation_error <> '' THEN 1 ELSE 0 END) AS BIGINT) AS validation_failures
-           FROM read_parquet('${extractDumpPath(dir)}/*.parquet')
+           FROM read_parquet('${dumpPath("extract_dump", dir)}/*.parquet')
            GROUP BY document_type, is_valid ORDER BY document_type, is_valid""",
       // the audit recomputed from the dumped (doc_id, ord, offset) rows —
       // any disagreement between the engine's row-local pass and the
       // window-function formulation fails the driver hash
       "x11_span_audit" ->
         s"""WITH s AS (SELECT doc_id, ord, "offset"
-               FROM read_parquet('${spanAuditDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("span_audit", dir)}/*.parquet')),
            v AS (SELECT doc_id,
                CASE WHEN lag("offset") OVER w IS NOT NULL
                     AND "offset" <= lag("offset") OVER w THEN 1 ELSE 0 END AS viol,
@@ -1066,7 +1015,7 @@ object SparkEntry {
            FROM v GROUP BY doc_id ORDER BY doc_id""",
       "x08_span_runs" ->
         s"""WITH s AS (SELECT doc_id, ord, kind
-               FROM read_parquet('${spansDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("spans_dump", dir)}/*.parquet')),
            brk AS (SELECT doc_id, ord, kind,
                CASE WHEN lag(kind) OVER w IS NULL
                     OR lag(kind) OVER w <> kind THEN 1 ELSE 0 END AS b,
@@ -1101,7 +1050,7 @@ object SparkEntry {
                CAST(COALESCE(sum(cost) OVER (ORDER BY doc_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                  AS BIGINT) AS global_offset
-             FROM read_parquet('${mmCostDumpPath(dir)}/*.parquet'))
+             FROM read_parquet('${dumpPath("mm_cost_dump", dir)}/*.parquet'))
            SELECT doc_id, n_tokens, global_offset,
                   CAST(global_offset // 1024 AS BIGINT) AS start_pack,
                   CAST((global_offset + greatest(n_tokens, 1) - 1) // 1024
@@ -1112,7 +1061,7 @@ object SparkEntry {
       // byte-for-byte (md5 equality per doc)
       "x12_render_interleaved" ->
         s"""WITH sp AS (SELECT doc_id, ord, kind, text, media_ref, "offset"
-               FROM read_parquet('${renderDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("render_dump", dir)}/*.parquet')),
            r AS (SELECT doc_id,
                string_agg(CASE WHEN kind = 'text' THEN text
                           ELSE '<|' || kind || ':' || media_ref || '|>' END,
@@ -1131,14 +1080,14 @@ object SparkEntry {
         s"""SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
              CAST(sum(length(line)) AS BIGINT) AS n_chars,
              md5(string_agg(line, chr(10) ORDER BY ord)) AS lines_hash
-           FROM read_parquet('${htmlStripDumpPath(dir)}/*.parquet')
+           FROM read_parquet('${dumpPath("html_strip_dump", dir)}/*.parquet')
            GROUP BY doc_id ORDER BY doc_id""",
       // FK audit recomputed with NOT EXISTS anti-joins over the two dumps
       "x14_media_integrity" ->
         s"""WITH r AS (SELECT doc_id, media_ref
-               FROM read_parquet('${mediaRefsDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("media_refs_dump", dir)}/*.parquet')),
            m AS (SELECT media_ref
-               FROM read_parquet('${mediaCatalogDumpPath(dir)}/*.parquet')),
+               FROM read_parquet('${dumpPath("media_catalog_dump", dir)}/*.parquet')),
            dang AS (SELECT doc_id, media_ref FROM r WHERE NOT EXISTS
                       (SELECT 1 FROM m WHERE m.media_ref = r.media_ref)),
            orph AS (SELECT media_ref FROM m WHERE NOT EXISTS
@@ -1155,10 +1104,10 @@ object SparkEntry {
       // packing over the surviving costs, per-pack rollup
       "x15_mm_curation" ->
         s"""WITH surv AS (SELECT doc_id
-               FROM read_parquet('${mmCurationStatsPath(dir)}/*.parquet')
+               FROM read_parquet('${dumpPath("mm_curation_stats", dir)}/*.parquet')
                WHERE n_media >= 1 AND rendered_len >= 64),
            sc AS (SELECT c.doc_id, CAST(c.cost AS BIGINT) AS cost
-               FROM read_parquet('${mmCurationCostPath(dir)}/*.parquet') c
+               FROM read_parquet('${dumpPath("mm_curation_cost", dir)}/*.parquet') c
                JOIN surv USING (doc_id)),
            o AS (SELECT doc_id, cost,
                CAST(COALESCE(sum(cost) OVER (ORDER BY doc_id
@@ -1177,11 +1126,11 @@ object SparkEntry {
                CAST(sum(n_spans) AS BIGINT) AS sum_spans,
                CAST(sum(CASE WHEN is_valid THEN 0 ELSE 1 END) AS BIGINT)
                  AS n_failures
-             FROM read_parquet('${lineageDumpPath(dir)}/*.parquet')
+             FROM read_parquet('${dumpPath("lineage_dump", dir)}/*.parquet')
              GROUP BY 1),
            lin AS (SELECT partition_id AS bucket_group, doc_count,
                span_count, failures
-             FROM read_parquet('${lineageRunPath(dir)}/lineage/*.parquet'))
+             FROM read_parquet('${dumpPath("lineage_run", dir)}/lineage/*.parquet'))
            SELECT bucket_group, n_docs, sum_spans, n_failures,
              CAST(CASE WHEN n_docs = doc_count AND sum_spans = span_count
                   AND n_failures = failures THEN 1 ELSE 0 END AS BIGINT)
@@ -1195,7 +1144,7 @@ object SparkEntry {
                row_number() OVER w - 1 AS pos,
                lead(kind) OVER w AS next_kind,
                lead(text) OVER w AS next_text
-             FROM read_parquet('${captionDumpPath(dir)}/*.parquet')
+             FROM read_parquet('${dumpPath("caption_dump", dir)}/*.parquet')
              WINDOW w AS (PARTITION BY doc_id ORDER BY "offset", ord))
            SELECT doc_id, CAST(pos AS BIGINT) AS ord, media_ref,
                   CAST(length(next_text) AS BIGINT) AS caption_len,

@@ -16,7 +16,6 @@ object PassportExtractor {
   private val surnamePat = Pattern.compile(
     "SURNAME[\\s:]*([A-Z\\s]+?)(?=\\s+GIVEN|\\s+NATIONALITY|\\s+DATE|\\n|$)")
   private val ppLinePat = Pattern.compile("^[A-Z][0-9]{7}$")
-  private val dateAnyPat = Pattern.compile("\\b\\d{2}[/-]\\d{2}[/-]\\d{4}\\b")
   private val dateGrpPat = Pattern.compile("\\b(\\d{2}[/-]\\d{2}[/-]\\d{4})\\b")
   private val dobLabelPat = Pattern.compile("DATE\\s*OF\\s*BIRTH[\\s:]*(\\d{2}[/-]\\d{2}[/-]\\d{4})")
   private val sexPat = Pattern.compile("(?:SEX|GENDER)[\\s:]*(M|F|MALE|FEMALE)")

@@ -196,7 +196,7 @@ object SimilarityOps {
     * Plan note: the `crossJoin(broadcast(queries))` + `=!=` filter compiles
     * to a BroadcastNestedLoopJoin — here that IS the right plan (the big
     * side streams once against Q broadcast rows; there is no equi-key), not
-    * the accidental-cartesian smell PlanSweep flags it as. */
+    * the accidental-cartesian smell `Probe smells` flags it as. */
   def bruteTopK(emb: DataFrame, numQueries: Int = 10, k: Int = 10): DataFrame = {
     val queries = emb.orderBy(col("vec_id")).limit(numQueries)
       .select(col("vec_id").as("query_id"),
@@ -358,6 +358,11 @@ object SimilarityOps {
                maxBroadcastRows: Long = BruteRowLimit,
                collapseExact: Boolean = true,
                collapseFloor: Int = 16384): DataFrame = {
+    if (k <= 0) {
+      val spark = emb.sparkSession
+      import spark.implicits._
+      return Seq.empty[(Int, Long, Long)].toDF("rank", "vec_a", "vec_b")
+    }
     if (collapseExact)
       return topPairsCollapsed(emb, k, maxBroadcastRows, collapseFloor)
     val spark = emb.sparkSession

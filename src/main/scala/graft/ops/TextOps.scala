@@ -326,22 +326,4 @@ object TextOps {
     }
     out
   }
-
-  def rollingHashes(text: String, k: Int): Array[Long] = {
-    val s = text
-    if (s.length < k) return Array.empty
-    val B = 1000003L
-    var pow = 1L
-    (1 until k).foreach(_ => pow *= B)
-    var h = 0L
-    val out = new Array[Long](s.length - k + 1)
-    var i = 0
-    while (i < s.length) {
-      h = h * B + s.charAt(i)
-      if (i >= k) h -= pow * B * s.charAt(i - k)
-      if (i >= k - 1) out(i - k + 1) = h
-      i += 1
-    }
-    out
-  }
 }

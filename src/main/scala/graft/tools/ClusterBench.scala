@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.pipe.ExtractionPipeline
 
 /** Multi-JVM executor-topology bench phase (r4 "Next round" #6): launched
@@ -33,16 +32,7 @@ object ClusterBench {
     val docs = args.lift(0).map(_.toLong).getOrElse(500000L)
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val partitions = args.lift(2).map(_.toInt).getOrElse(128)
-    val spark = SparkSession.builder() // master comes from spark-submit
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "131072")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(partitions) // master comes from spark-submit
     import spark.implicits._
     // same count/partitions-keyed path as Bench → identical input files
     val path = s"/tmp/graft_bench_docs_${docs}_$partitions"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× scale-up of a driver testdata dir (sf0.1 → an
@@ -42,14 +41,7 @@ object ScaleUp {
     // evals) must never run against it, only the pair/linkage/suffix
     // probes that read raw tables. Printed loudly below.
     val subset: Option[Set[String]] = args.lift(3).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
 
     def maxOf(table: String, c: String): Long =
       spark.read.parquet(s"$src/$table.parquet")

@@ -282,7 +282,7 @@ class CurationOpsSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     val stats = SparkEntry.queries("x13_html_strip")(spark, d).collect()
     assert(stats.length === 8)
-    val lines = spark.read.parquet(SparkEntry.htmlStripDumpPath(d))
+    val lines = spark.read.parquet(SparkEntry.dumpPath("html_strip_dump", d))
       .as[(Long, Long, String)].collect().toSeq
     (0 until 8).foreach { i =>
       assert(lines.exists(l => l._1 == i && l._3.contains(s"content line $i")),

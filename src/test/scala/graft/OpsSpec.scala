@@ -679,6 +679,27 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("top pairs at k = 0: an empty, correctly typed frame that plans " +
+    "no kernel, also where the collapsed branch would run") {
+    // duplicate vectors (2 distinct of 6) and collapseFloor 0 select the
+    // collapsed kernel, whose k-slot heap throws on its first score at
+    // k = 0; only Catalyst's limit-0 rewrites keep it from running, so
+    // the answer must not plan it at all
+    val vecs = (0L until 6L)
+      .map(i => (i, Array(1f, (i % 2).toFloat, 0f, 0f), 0))
+      .toDF("vec_id", "embedding", "label")
+    val typed = SimilarityOps.topPairs(vecs, k = 1, collapseFloor = 0)
+    for (collapse <- Seq(true, false)) {
+      val none = SimilarityOps.topPairs(vecs, k = 0,
+        collapseExact = collapse, collapseFloor = 0)
+      assert(none.schema === typed.schema, s"collapse=$collapse")
+      assert(!none.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions]),
+        s"collapse=$collapse")
+      assert(none.collect().isEmpty, s"collapse=$collapse")
+    }
+  }
+
   test("brute-force baselines refuse oversized inputs: the row-count " +
     "guard trips BEFORE any driver collect, naming the scale path") {
     val vecs = (0L until 8L).map(i => (i, Array(i.toFloat, 1f, 0f, 0f)))
@@ -2145,6 +2166,13 @@ class OpsSpec extends AnyFunSuite {
   test("dup clusters: empty pair set yields empty output") {
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(DedupOps.dupClusters(empty).collect().isEmpty)
+  }
+
+  test("dupClustersOverDocs: empty input yields empty output") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val out = DedupOps.dupClustersOverDocs(empty)
+    assert(out.columns.toSeq === Seq("doc_id", "cluster_id", "cluster_size"))
+    assert(out.collect().isEmpty)
   }
 
   test("dupClustersOverDocs (rep-level CC) is row-identical to " +

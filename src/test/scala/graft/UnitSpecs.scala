@@ -350,3 +350,13 @@ class BenchSelectSpec extends AnyFunSuite {
       ("fallback(8->32)", 1.2))
   }
 }
+
+/** Every registry query has a DuckDB oracle and every oracle a query. */
+class QueryRegistrySpec extends AnyFunSuite {
+  test("query and oracle key sets are equal") {
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSqlFor("sf0.01").keySet
+    assert((q -- o) === Set.empty[String]) // queries without an oracle
+    assert((o -- q) === Set.empty[String]) // oracles without a query
+  }
+}

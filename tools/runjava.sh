@@ -4,5 +4,5 @@
 CP=$(cat /tmp/cp.txt)
 OPENS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-32g} -XX:+UseParallelGC -Xmn12g \
+  -Xmx${SPARK_DRIVER_MEM:-32g} -XX:+UseParallelGC \
   -cp "$CP" "$@"
