@@ -15,7 +15,31 @@ import graft.text.PyText._
   */
 object DocTypeClassifier {
   private val aadhaarNumPat = Pattern.compile("\\b\\d{4}\\s?\\d{4}\\s?\\d{4}\\b")
-  private val panPat = Pattern.compile("[A-Z]{5}\\d{4}[A-Z]")
+
+  /** `[A-Z]{5}\d{4}[A-Z]` found anywhere in `s` (java \d is ASCII [0-9]
+    * without UNICODE_CHARACTER_CLASS), as one char scan: at each
+    * non-letter, a run of >= 5 A–Z just before it, then 4 digits and an
+    * A–Z, is a match starting 5 chars back; no match can start inside a
+    * shorter run. */
+  private[graft] def hasPanNumber(s: String): Boolean = {
+    def upper(c: Char) = c >= 'A' && c <= 'Z'
+    def digit(c: Char) = c >= '0' && c <= '9'
+    val n = s.length
+    var run = 0 // A–Z chars ending just before i
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (upper(c)) run += 1
+      else {
+        if (run >= 5 && i + 4 < n && digit(c) && digit(s.charAt(i + 1)) &&
+            digit(s.charAt(i + 2)) && digit(s.charAt(i + 3)) &&
+            upper(s.charAt(i + 4))) return true
+        run = 0
+      }
+      i += 1
+    }
+    false
+  }
 
   // extractor.py:60-73 — searched against raw_text.lower(). r6 hot-path
   // form: each regex is guarded by a `contains` of a literal substring
@@ -96,7 +120,7 @@ object DocTypeClassifier {
       baseData = AadhaarExtractor.extract(rawText, lines)
 
     if (!baseData.truthy("document_type") && hasDigit &&
-        reTest(panPat, rawText))
+        hasPanNumber(rawText))
       baseData = PanExtractor.extract(rawText, lines)
 
     if (!baseData.truthy("document_type") &&

@@ -1,7 +1,5 @@
 package graft.html
 
-import java.util.regex.Pattern
-
 /** Main-content extraction for `text`-kind spans (HTML boilerplate strip +
   * DOM heuristics) — the north_rule addition on top of the reference's
   * line-veto approach (analogue: `pipeline/cleaner.py:30-31` veto lists).
@@ -25,8 +23,8 @@ object BoilerplateStrip {
   //   |<(script|style|nav|header|footer|aside|noscript)\b.*?</\1\s*>
   //   |(?-s:</?(p|div|...|pre|hr)\b[^>]*>)
   // comment/chrome → "\n", boundary → the BLOCK sentinel
-  private val linkPat = Pattern.compile("(?i)<a\\b")
-  // tag strip, \s+ collapse and the keyword veto are hand scans below
+  // the link count (`(?i)<a\b` finds, linkCount below), tag strip, \s+
+  // collapse and the keyword veto are hand scans
   // (r6 hot path — equivalence-pinned against the chained regex form in
   // UnitSpecs' ChainedStrip property tests)
 
@@ -85,22 +83,71 @@ object BoilerplateStrip {
     var k = 0
     while (k < set.length) {
       val cand = set(k)
-      if (cand.length == len && s.regionMatches(true, start, cand, 0, len))
+      if (cand.length == len && asciiFoldMatches(s, start, cand))
         return cand
       k += 1
     }
     null
   }
 
+  /** Whether JDK 17's `\b` sees a word char at `j` right after an ASCII
+    * letter or digit, i.e. whether `\b` fails there: `_`, a Unicode letter
+    * or digit (JDK 17's `\b`, unlike its `\w`, is not ASCII-only), or a
+    * non-spacing mark (it has that letter as its base). False at the end.
+    * Checked against the regex for every code point (BoilerplateStripSpec). */
+  private def wordCharAt(s: String, j: Int): Boolean = j < s.length && {
+    val c = s.charAt(j)
+    if (c < 128) isWordChar(c)
+    else {
+      val cp = s.codePointAt(j)
+      Character.isLetterOrDigit(cp) ||
+        Character.getType(cp) == Character.NON_SPACING_MARK
+    }
+  }
+
+  /** Number of `(?i)<a\b` matches in `block`, counted up to 2 (only the
+    * >= 2 threshold is observed). `(?i)` folds ASCII only, so the name is
+    * `a` or `A`; matches cannot overlap, as each starts with '<'. */
+  private def linkCount(block: String): Int = {
+    var c = 0
+    var i = block.indexOf('<')
+    while (c < 2 && i >= 0) {
+      val next =
+        if (i + 1 < block.length) block.charAt(i + 1) else ' '
+      if ((next == 'a' || next == 'A') && !wordCharAt(block, i + 2)) {
+        c += 1
+        i = block.indexOf('<', i + 2)
+      } else i = block.indexOf('<', i + 1)
+    }
+    c
+  }
+
+  /** Whether `s` holds the lowercase ASCII `name` at `start`, folding
+    * A–Z only: the regex's `(?i)` (no UNICODE_CASE) folds ASCII, so `ſ`
+    * (U+017F) never matches `s` and `İ` (U+0130) never matches `i`, where
+    * `regionMatches(true, …)` would match both. */
+  private def asciiFoldMatches(s: String, start: Int, name: String): Boolean = {
+    val len = name.length
+    if (start + len > s.length) return false
+    var k = 0
+    while (k < len) {
+      val c = s.charAt(start + k)
+      val lc = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+      if (lc != name.charAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
   /** End index (exclusive) of the first `</name\s*>` at or after `from`
-    * (name case-insensitive, \s = [ \t\n\x0B\f\r]); -1 when none — the
-    * lazy `.*?</\1\s*>` tail of the chrome branch. */
+    * (name ASCII case-insensitive, \s = [ \t\n\x0B\f\r]); -1 when none —
+    * the lazy `.*?</\1\s*>` tail of the chrome branch. */
   private def findClose(s: String, from: Int, name: String): Int = {
     val n = s.length
     var i = s.indexOf('<', from)
     while (i >= 0) {
       if (i + 1 < n && s.charAt(i + 1) == '/' &&
-          s.regionMatches(true, i + 2, name, 0, name.length)) {
+          asciiFoldMatches(s, i + 2, name)) {
         var j = i + 2 + name.length
         while (j < n && {
           val c = s.charAt(j); c == ' ' || (c >= '\t' && c <= '\r')
@@ -122,8 +169,10 @@ object BoilerplateStrip {
     * next '<'). Name+\b is matched as "the maximal word run equals the
     * name" (every name is a full word, so \b enforces exactly that),
     * which also makes the in-order alternation ("p" before "pre")
-    * order-free. Equivalence is property-pinned against ChainedStrip in
-    * UnitSpecs. */
+    * order-free. JDK 17's \b, unlike its \w, counts every Unicode letter
+    * or digit (and a non-spacing mark after one) as a word char, so a
+    * run followed by such a char is no name ("<pé>" is not a boundary).
+    * Equivalence is property-pinned against ChainedStrip in UnitSpecs. */
   private def chromeAndBoundaries(html: String): String = {
     val n = html.length
     var i = html.indexOf('<')
@@ -144,7 +193,7 @@ object BoilerplateStrip {
           var j = nameStart
           while (j < n && isWordChar(html.charAt(j))) j += 1
           val len = j - nameStart
-          if (len > 0) {
+          if (len > 0 && !wordCharAt(html, j)) {
             if (c1 != '/') {
               val cn = nameIn(chromeNames, html, nameStart, len)
               if (cn != null) {
@@ -179,26 +228,39 @@ object BoilerplateStrip {
     // fused chrome-strip + block-boundary pass (one scan; hand scanner)
     val s = chromeAndBoundaries(html)
 
-    val blocks = s.split(BlockSep)
+    // blocks between BlockSep occurrences and lines between '\n' are
+    // walked with indexOf (String.split(BlockSep) compiles a regex per
+    // call); empty blocks and lines emit nothing, so split's dropping of
+    // trailing empties is unobservable
     val out = Vector.newBuilder[String]
-    for (block <- blocks) {
-      val linkCount = {
-        // only the >= 2 threshold is observed — stop counting at 2
-        val lm = linkPat.matcher(block)
-        var c = 0
-        while (c < 2 && lm.find()) c += 1
-        c
-      }
-      val noTags = stripTags(block)
-      val text = decodeEntities(noTags)
-      for (rawLine <- text.split('\n')) {
-        val line = collapseWs(rawLine).trim
-        if (line.nonEmpty) {
+    var blockStart = 0
+    while (blockStart >= 0) {
+      val sepAt = s.indexOf(BlockSep, blockStart)
+      val block =
+        if (sepAt < 0) s.substring(blockStart)
+        else s.substring(blockStart, sepAt)
+      blockStart = if (sepAt < 0) -1 else sepAt + BlockSep.length
+      val links = linkCount(block)
+      val text = decodeEntities(stripTags(block))
+      var lineStart = 0
+      while (lineStart >= 0) {
+        val nl = text.indexOf('\n', lineStart)
+        val lineEnd = if (nl < 0) text.length else nl
+        // String.trim's bounds (chars <= ' ') taken before the copy:
+        // trim(collapse(x)) == collapse(trim(x)), as collapse maps chars
+        // <= ' ' to chars <= ' ' and leaves the rest alone
+        var a = lineStart
+        var b = lineEnd
+        while (a < b && text.charAt(a) <= ' ') a += 1
+        while (b > a && text.charAt(b - 1) <= ' ') b -= 1
+        if (a < b) {
+          val line = collapseWs(text.substring(a, b))
           // DOM heuristic: link-dense short blocks are navigation chrome
-          val navLike = linkCount >= 2 && line.length < 80
+          val navLike = links >= 2 && line.length < 80
           val boiler = hasBoilerKeyword(line.toLowerCase)
           if (!navLike && !boiler) out += line
         }
+        lineStart = if (nl < 0) -1 else nl + 1
       }
     }
     out.result()
@@ -231,9 +293,21 @@ object BoilerplateStrip {
     * the per-line matcher + result allocations. */
   private def collapseWs(s: String): String = {
     val n = s.length
-    val sb = new java.lang.StringBuilder(n)
+    // fast path: find the first char the collapse changes (a ws char other
+    // than ' ', or any ws right after ws); none means s is its own result
     var i = 0
     var inRun = false
+    var changed = false
+    while (!changed && i < n) {
+      val c = s.charAt(i)
+      if (c == ' ' || (c >= '\t' && c <= '\r')) {
+        if (inRun || c != ' ') changed = true
+        else { inRun = true; i += 1 }
+      } else { inRun = false; i += 1 }
+    }
+    if (!changed) return s
+    val sb = new java.lang.StringBuilder(n)
+    sb.append(s, 0, i)
     while (i < n) {
       val c = s.charAt(i)
       if (c == ' ' || (c >= '\t' && c <= '\r')) {

@@ -94,17 +94,37 @@ object JValue {
       }
       sb.append('}')
   }
+  private val hexDigits = "0123456789abcdef"
+
+  /** Escapes `"`, `\` and chars below 0x20 (`\n`, `\r`, `\t` by name, the
+    * rest as lowercase `\u00xx`); every other char, non-ASCII included,
+    * is copied as is. The runs between escapes are appended in bulk.
+    * Equivalence with the char-by-char form is property-tested
+    * (JsonWriterSpec). */
   private def writeString(s: String, sb: java.lang.StringBuilder): Unit = {
     sb.append('"')
-    s.foreach {
-      case '"'           => sb.append("\\\"")
-      case '\\'          => sb.append("\\\\")
-      case '\n'          => sb.append("\\n")
-      case '\r'          => sb.append("\\r")
-      case '\t'          => sb.append("\\t")
-      case c if c < ' '  => sb.append(f"\\u${c.toInt}%04x")
-      case c             => sb.append(c)
+    val n = s.length
+    var start = 0
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c < ' ' || c == '"' || c == '\\') {
+        sb.append(s, start, i)
+        c match {
+          case '"'  => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _    =>
+            sb.append("\\u00").append(hexDigits.charAt(c >> 4))
+              .append(hexDigits.charAt(c & 0xf))
+        }
+        start = i + 1
+      }
+      i += 1
     }
+    sb.append(s, start, n)
     sb.append('"')
   }
   /** Python float repr for the score domain (finite, modest magnitude). */

@@ -72,18 +72,22 @@ object ClassifierOps {
       val mis = scored.filter(col("margin") <= 0)
       // D-row update: posexplode the misclassified features, partial
       // aggregation makes each partition contribute ≤ D rows. n_mis
-      // rides the SAME aggregation (r6): x is a dense length-D array, so
-      // every misclassified doc contributes exactly one row to every
-      // index group — any group's count IS the misclassified-doc count,
-      // and the old separate mis.count() re-ran the whole scoring scan
-      // a second time per epoch
+      // rides the SAME aggregation (r6) instead of a separate
+      // mis.count(), which re-ran the whole scoring scan per epoch. Every
+      // misclassified row with a non-empty x reaches index 0, the
+      // largest group, so the max group count counts those rows whatever
+      // the arrays' lengths; an empty x (dims = 0) scores margin 0 and
+      // is misclassified too, and posexplode_outer gives it one row at a
+      // null index, which is counted and adds nothing to Δw
       val dwRows = mis
-        .select(col("y"), posexplode(col("x")).as(Seq("i", "c")))
+        .select(col("y"), posexplode_outer(col("x")).as(Seq("i", "c")))
         .groupBy(col("i")).agg(sum(col("y") * col("c")).as("dw"),
           count(lit(1)).as("cnt"))
         .collect()
-      val dw = dwRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val nMis = dwRows.headOption.map(_.getLong(2)).getOrElse(0L)
+      val (idxRows, emptyRows) = dwRows.partition(r => !r.isNullAt(0))
+      val dw = idxRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val nMis = idxRows.map(_.getLong(2)).maxOption.getOrElse(0L) +
+        emptyRows.map(_.getLong(2)).sum
       // annealed step: epoch e applies Δw >> (e−1) — the raw full-batch
       // update overshoots and cycles between the two all-one-class
       // states (observed: n_mis 500→218→282→218→282); geometric decay is

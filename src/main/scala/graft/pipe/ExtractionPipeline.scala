@@ -111,12 +111,16 @@ object ExtractionPipeline {
     var failures = 0L
     var mediaCount = 0
 
-    // spans are contiguous-by-offset in well-formed docs; sort only when not
+    // spans are contiguous-by-offset in well-formed docs; sort only when
+    // not. One iterator pass: the decoded spans are a List, where
+    // spans(k) and spans.length would make the check quadratic
     var sorted = true
-    var k = 1
-    while (k < doc.spans.length && sorted) {
-      if (doc.spans(k).offset < doc.spans(k - 1).offset) sorted = false
-      k += 1
+    var prev = Int.MinValue
+    val it = doc.spans.iterator
+    while (sorted && it.hasNext) {
+      val off = it.next().offset
+      if (off < prev) sorted = false
+      prev = off
     }
     val ordered = if (sorted) doc.spans else doc.spans.sortBy(_.offset)
     ordered.foreach { s =>
@@ -186,8 +190,9 @@ object ExtractionPipeline {
       extracted("raw_text") = o.raw_text
 
     // metadata — extractor.py:113-114
+    val score = PyText.round2(o.avg_conf * 100)
     extracted("face_image") = o.face_b64 // null when absent (Python None)
-    extracted("ocr_accuracy_score") = PyText.round2(o.avg_conf * 100)
+    extracted("ocr_accuracy_score") = score
 
     val (isValid, record, errorMsg) = Validator.validateDocument(extracted.toJ)
 
@@ -195,7 +200,6 @@ object ExtractionPipeline {
       case Some(JStr(s)) => s
       case _             => "Unknown"
     }
-    val score = PyText.round2(o.avg_conf * 100)
 
     // Output span contract (SURVEY.md §7.2): one field span per record key
     // in dict order, then the face media span, then the trailing metric span.

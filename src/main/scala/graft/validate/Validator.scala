@@ -27,7 +27,10 @@ object Validator {
       check: JValue => Option[String] = _ => None,
       coerce: JValue => JValue = identity)
 
-  final case class Schema(name: String, fields: Vector[FieldSpec])
+  final case class Schema(name: String, fields: Vector[FieldSpec]) {
+    /** Declared field names, built once per schema (extras are the rest). */
+    val declared: Set[String] = fields.iterator.map(_.name).toSet
+  }
 
   // --- field validators (schemas/*.py) -------------------------------------
   private val aadhaarNumPat = Pattern.compile("^\\d{4} \\d{4} \\d{4}$")
@@ -137,7 +140,6 @@ object Validator {
     val schema = schemaFor(docType)
     val errors = Vector.newBuilder[(String, String)]
     val out = Vector.newBuilder[(String, JValue)]
-    val declared = schema.fields.map(_.name).toSet
 
     schema.fields.foreach { f =>
       data.get(f.name) match {
@@ -153,7 +155,7 @@ object Validator {
     }
     // extras (ConfigDict(extra='allow'), schemas/base.py:4-8) — appended in
     // input insertion order
-    data.fields.foreach { case (k, v) => if (!declared.contains(k)) out += (k -> v) }
+    data.fields.foreach { case (k, v) => if (!schema.declared.contains(k)) out += (k -> v) }
 
     val errs = errors.result()
     if (errs.isEmpty) (true, JObj(out.result()), "")

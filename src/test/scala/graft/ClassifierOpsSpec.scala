@@ -80,6 +80,20 @@ class ClassifierOpsSpec extends AnyFunSuite {
       docs.map { case (id, t, l) => (id, l, t) }, 6, 64, "en"))
   }
 
+  test("n_mis counts misclassified docs whose feature arrays are empty") {
+    // dims = 0: every x is empty, every margin is 0 (<= 0), so every doc
+    // is misclassified in every epoch and no weight moves; texts shorter
+    // than 3 chars have no 3-grams to hash
+    val docs = Seq((0L, "a", "en"), (1L, "", "de"), (2L, "bc", "de"))
+    val df = docs.toDF("doc_id", "text", "lang")
+    val got = ClassifierOps.perceptronTrain(df, epochs = 3, dims = 0,
+        posLang = "en")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(got === (1L to 3L).map(e => (e, 3L, 0L, 0L)))
+    assert(got === bruteTrain(
+      docs.map { case (id, t, l) => (id, l, t) }, 3, 0, "en"))
+  }
+
   test("Cohen's kappa: perfect agreement → 1000 milli, hand-computed " +
     "contingency matches, negative kappa floors like DuckDB //, " +
     "constant raters → 0 by convention, layout-invariant") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import graft.text.PyText
 import graft.html.BoilerplateStrip
 import graft.model._
@@ -135,12 +135,154 @@ class BoilerplateStripSpec extends AnyFunSuite {
       "<SCRIPT>", "</SCRIPT >", "<Style>x</style\n>", "<scriptx>",
       "<pre>", "</pre>", "<h7>", "<h1x>", "<ph>", "<table>", "</table>",
       "<p <x>", "<noscript>", "</noscript>", "<NAV", "<!---->", "<!-->",
-      "<p\tclass=y>", "<hr/>", "<td>", "<blockquote>")
+      "<p\tclass=y>", "<hr/>", "<td>", "<blockquote>",
+      // closing names under Unicode case folding: the regex folds ASCII
+      // only, so none of these closes its chrome tag
+      "<aside>", "</aside>", "</ſcript>", "</aſide>", "</scrİpt>",
+      // block and line walk edges: adjacent boundaries, a literal block
+      // sentinel, CR/LF, tabs, double spaces, control chars at line ends
+      "<p></p><p>", "\u0000BLOCK\u0000", "\r\n", "\t", "a\tb", "  ",
+      "x  y", "\u0001", "\u001f", "\u000b", "\u000c", "\u0000", " \u0001z\u0002 ",
+      // names followed by a char JDK 17's \b counts as a word char
+      // (letter, digit, non-spacing mark) or does not (NBSP, ×)
+      "<pé>", "<p\u0301>", "<scripté>", "<h1٣>", "</divª>", "<p\u00a0>",
+      "<nav×>", "<A href=x>", "<a>", "<aé>", "<a\u0301>", "<ab>", "<a_>",
+      "<a", "<a\u00a0>", "<a\ud835\udc00>", "<A\t>")
     val htmlGen = Gen.chooseNum(0, 30).flatMap(n =>
       Gen.listOfN(n, frag).map(_.mkString))
-    val res = SCTest.check(SCTest.Parameters.default,
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(2000),
       Prop.forAll(htmlGen)(h => BoilerplateStrip.lines(h) == ChainedStrip.lines(h)))
     assert(res.passed)
+  }
+
+  test("tag names match under ASCII case folding and JDK 17's Unicode \\b") {
+    Seq("<p>a</p><script>x</ſcript><p>b</p>",
+        "<p>a</p><aside>x</aſide><p>b</p>",
+        "<p>a</p><script>x</scrİpt><p>b</p>",
+        "<p>a</p><SCRIPT>x</Script><p>b</p>",
+        "a<pé>b", "a<p\u0301>b", "a<scripté>b</script>c", "a<p\u00a0>b").foreach { h =>
+      assert(BoilerplateStrip.lines(h) === ChainedStrip.lines(h), h)
+    }
+    assert(BoilerplateStrip.lines("<p>a</p><script>x</ſcript><p>b</p>")
+      .exists(_.contains("x")))
+  }
+
+  test("the \\b after a tag or link name agrees with the regex for every " +
+    "following code point") {
+    // BMP, every lone surrogate, and a stride through the supplementary
+    // planes; each html decides on the char after `<a`, `<p` or `<script`
+    val cps = (0 until 0x10000).iterator ++ (0x10000 to 0x10ffff by 61).iterator
+    cps.foreach { cp =>
+      val ch = new String(Character.toChars(cp))
+      Seq(s"<div>one<a$ch> <a>two</div>", s"a<p$ch>b",
+          s"<script$ch>x</script>y").foreach { h =>
+        if (BoilerplateStrip.lines(h) != ChainedStrip.lines(h))
+          fail(f"U+$cp%04X: $h")
+      }
+    }
+  }
+}
+
+/** The bulk-append JSON writer against the char-by-char form it replaced,
+  * kept here as the reference. */
+class JsonWriterSpec extends AnyFunSuite {
+  private object CharJson {
+    def toJson(v: JValue): String = {
+      val sb = new java.lang.StringBuilder
+      write(v, sb); sb.toString
+    }
+    private def write(v: JValue, sb: java.lang.StringBuilder): Unit = v match {
+      case JNull    => sb.append("null")
+      case JBool(b) => sb.append(if (b) "true" else "false")
+      case JNum(d)  => sb.append(JValue.pyFloatRepr(d))
+      case JStr(s)  => writeString(s, sb)
+      case JArr(items) =>
+        sb.append('[')
+        var first = true
+        items.foreach { i => if (!first) sb.append(", "); write(i, sb); first = false }
+        sb.append(']')
+      case JObj(fields) =>
+        sb.append('{')
+        var first = true
+        fields.foreach { case (k, fv) =>
+          if (!first) sb.append(", ")
+          writeString(k, sb); sb.append(": "); write(fv, sb); first = false
+        }
+        sb.append('}')
+    }
+    private def writeString(s: String, sb: java.lang.StringBuilder): Unit = {
+      sb.append('"')
+      s.foreach {
+        case '"'           => sb.append("\\\"")
+        case '\\'          => sb.append("\\\\")
+        case '\n'          => sb.append("\\n")
+        case '\r'          => sb.append("\\r")
+        case '\t'          => sb.append("\\t")
+        case c if c < ' '  => sb.append(f"\\u${c.toInt}%04x")
+        case c             => sb.append(c)
+      }
+      sb.append('"')
+    }
+  }
+
+  // every char below 0x20, the two escaped printables, DEL, non-ASCII BMP
+  // (incl. U+2028/2029 and U+FFFF), a surrogate pair, lone surrogates
+  private val pieceGen: Gen[String] = Gen.frequency(
+    4 -> Gen.choose(0, 0x1f).map(_.toChar.toString),
+    2 -> Gen.oneOf("\"", "\\", "\u007f", "/"),
+    2 -> Gen.oneOf("é", "ſ", "İ", "中文", "\u2028", "\u2029", "\uffff",
+      "\ud83d\ude00", "\ud800", "\udfff"),
+    4 -> Gen.alphaNumStr.map(_.take(6)),
+    1 -> Gen.asciiPrintableStr.map(_.take(6)),
+    1 -> Arbitrary.arbString.arbitrary.map(_.take(6)))
+  private val strGen: Gen[String] =
+    Gen.chooseNum(0, 8).flatMap(n => Gen.listOfN(n, pieceGen).map(_.mkString))
+
+  private def valueGen(depth: Int): Gen[JValue] = {
+    val leaf: Gen[JValue] = Gen.oneOf(
+      strGen.map(JStr(_): JValue), Gen.const(JNull: JValue),
+      Arbitrary.arbBool.arbitrary.map(JBool(_): JValue),
+      Gen.oneOf(0.0, 1.0, -2.0, 87.34, 0.12, 1e-7).map(JNum(_): JValue))
+    if (depth <= 0) leaf
+    else Gen.frequency(
+      3 -> leaf,
+      1 -> Gen.chooseNum(0, 4).flatMap(n =>
+        Gen.listOfN(n, valueGen(depth - 1)).map(xs => JArr(xs.toVector): JValue)),
+      1 -> Gen.chooseNum(0, 4).flatMap(n =>
+        Gen.listOfN(n, Gen.zip(strGen, valueGen(depth - 1)))
+          .map(kvs => JObj(kvs.toVector): JValue)))
+  }
+
+  test("toJson equals the char-by-char writer on nested values (property)") {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAll(valueGen(3))(v => JValue.toJson(v) == CharJson.toJson(v)))
+    assert(res.passed)
+    val all = JStr((0 to 0x7f).map(_.toChar).mkString + "\ud83d\ude00é")
+    assert(JValue.toJson(all) === CharJson.toJson(all))
+    assert(JValue.toJson(JStr("\u0000\u001f\u007f")) === "\"\\u0000\\u001f\u007f\"")
+  }
+}
+
+/** The PAN-number char scan in the classifier against the regex it
+  * replaced. */
+class PanScanSpec extends AnyFunSuite {
+  private val panPat = java.util.regex.Pattern.compile("[A-Z]{5}\\d{4}[A-Z]")
+
+  test("hasPanNumber equals a find of [A-Z]{5}\\d{4}[A-Z] (property)") {
+    val piece = Gen.frequency(
+      6 -> Gen.choose('A', 'Z').map(_.toString),
+      4 -> Gen.choose('0', '9').map(_.toString),
+      1 -> Gen.oneOf("a", " ", "\n", "_", "é", "٣", "Ａ", "ABCDE", "1234"))
+    val strGen = Gen.chooseNum(0, 40).flatMap(n =>
+      Gen.listOfN(n, piece).map(_.mkString))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5000),
+      Prop.forAll(strGen)(t =>
+        DocTypeClassifier.hasPanNumber(t) == panPat.matcher(t).find()))
+    assert(res.passed)
+    Seq("ABCDE1234F", "xABCDE1234Fx", "ABCDEF1234G", "ABCD1234E", "ABCDE123F",
+        "ABCDE1234", "AAAAAB1234CABCDE1234Z", "ABCDE١٢٣٤F", "").foreach { t =>
+      assert(DocTypeClassifier.hasPanNumber(t) === panPat.matcher(t).find(), t)
+    }
   }
 }
 
@@ -281,6 +423,23 @@ class PipelineFlagsSpec extends AnyFunSuite {
     assert(first.media_refs.length === 1)
     assert(all.media_refs.length === 2)
     assert(all.lines.length > first.lines.length)
+  }
+
+  test("out-of-order span offsets give the same DocOcr as the sorted doc") {
+    val backend = new DeterministicOcrBackend
+    val docs = (0L until 200L).map(graft.io.Synthesizer.genDoc(42L, _))
+      .filter(d => d.spans.length > 2 && d.spans.exists(_.kind == "text") &&
+        d.spans.exists(_.kind == "media"))
+    assert(docs.nonEmpty)
+    docs.foreach { d =>
+      val sorted = ExtractionPipeline.ocrDoc(d, backend)
+      // a List, as the Dataset encoder hands spans to the kernel
+      val shuffled = d.copy(spans = new scala.util.Random(d.doc_id.hashCode)
+        .shuffle(d.spans.reverse).toList)
+      assert(ExtractionPipeline.ocrDoc(shuffled, backend) === sorted)
+      val reversed = d.copy(spans = d.spans.reverse.toList)
+      assert(ExtractionPipeline.ocrDoc(reversed, backend) === sorted)
+    }
   }
 
   test("parseLayout flag does not change output (O3: result discarded)") {
